@@ -16,8 +16,8 @@ Spark engine the same operational surface:
 ``--project module[:function]`` points at any callable that registers
 models + tests on an :class:`~.runner.Engine` (default: the bundled
 demo project, the reference pipeline over packaged synthetic seeds).
-``--threads N`` (>1) routes ``run`` through the concurrent Kahn-
-wavefront scheduler — the analogue of dbt's ``--threads``. Exit codes
+``--threads N`` caps how many DAG nodes the scheduler keeps in flight
+(1 = serial DAG order) — the analogue of dbt's ``--threads``. Exit codes
 follow dbt: 0 green, 1 failed build/tests — so the reference's
 orchestrator pattern (gate on exit code) ports unchanged.
 """
@@ -320,19 +320,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         # table and rebuild from this run's batch (Engine reads the flag
         # in _materialize_node's incremental branch)
         eng.full_refresh = args.full_refresh
-        rels = (
-            eng.run_concurrent(
-                args.select, exclude=args.exclude, threads=args.threads,
-                state=state, defer=args.defer_wh,
-                favor_state=args.favor_state, selector=args.selector,
-                empty=args.empty,
-            )
-            if args.threads > 1
-            else eng.run(
-                args.select, exclude=args.exclude, state=state,
-                defer=args.defer_wh, favor_state=args.favor_state,
-                selector=args.selector, empty=args.empty,
-            )
+        rels = eng.run_concurrent(
+            args.select, exclude=args.exclude, threads=args.threads,
+            state=state, defer=args.defer_wh,
+            favor_state=args.favor_state, selector=args.selector,
+            empty=args.empty,
         )
         for name, rel in rels.items():
             print(f"built {name} ({rel.materialization})")

@@ -6,18 +6,21 @@ The Spark rendering of the reference's entry points (SURVEY.md §3):
 ``automate_pipeline.py``'s build-then-test-with-gating (reference:
 automate_pipeline.py:10-26) → :meth:`Engine.pipeline`.
 
-Execution is topological over the ref() DAG. Unlike dbt there is no
-thread-pool of node runners — Spark parallelizes *within* each action,
-and view models cost nothing until a table/test materializes them.
-Table models write sequentially here; on a cluster you'd submit
+Execution is topological over the ref() DAG, driven by one scheduler
+(``Engine._schedule``, dbt's GraphQueue + thread pool): ``threads``
+caps how many nodes are in flight, and a freed slot always goes to the
+ready node that comes first in topological order — so ``threads=1``
+runs the DAG serially in that order, and ``threads>1`` submits
 independent subtree writes from concurrent threads into the same
-SparkSession (scheduler pools) — the DAG API supports that without
-semantic change.
+SparkSession, while Spark parallelizes *within* each action. View
+models cost nothing until a table/test materializes them.
 """
 
 from __future__ import annotations
 
+import heapq
 from collections.abc import Callable, Sequence
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -219,38 +222,10 @@ class Engine:
         warehouse's relation wins when one exists (dbt favor-local);
         ``favor_state=True`` (dbt ``--favor-state``) makes the deferred
         environment's artifact always win."""
-        select, exclude = self._resolve_selection(select, exclude, selector)
-        selected = self.registry.select(select, exclude=exclude, state=state)
-        self.registry.invalidate()
-        order = self.registry.topological_order(
-            selected if (select or exclude) else None
+        return self._schedule(
+            select, exclude, selector, state=state, defer=defer,
+            favor_state=favor_state, empty=empty,
         )
-        if defer is not None:
-            self.registry.set_defer(
-                defer, selected,
-                favor_state=favor_state, local_dir=self.warehouse_dir,
-            )
-        if empty:
-            self.registry.set_empty(True)
-        self._run_hooks(getattr(self, "on_run_start", None))
-        out: dict[str, MaterializedRelation] = {}
-        try:
-            for name in order:
-                if name not in selected:
-                    continue
-                rel = self._materialize_node(name)
-                out[name] = rel
-                self.relations[name] = rel
-        finally:
-            if defer is not None:
-                self.registry.clear_defer()
-            if empty:
-                # disarm AND drop memoized empty frames — a later real
-                # run must rebuild, never consume a dry-run slice
-                self.registry.clear_empty()
-                self.registry.invalidate()
-        self._run_hooks(getattr(self, "on_run_end", None))
-        return out
 
     def run_concurrent(
         self,
@@ -263,16 +238,18 @@ class Engine:
         selector: str | None = None,
         empty: bool = False,
     ) -> dict[str, MaterializedRelation]:
-        """:meth:`run` with dbt's node scheduling: independent DAG nodes
-        materialize CONCURRENTLY on a bounded thread pool; a node is
-        submitted the moment its last selected parent finishes (Kahn
-        wavefront), exactly dbt's GraphQueue + ThreadPool executor
+        """:meth:`run` with dbt's node scheduling: up to ``threads``
+        independent DAG nodes materialize CONCURRENTLY, and a node
+        becomes ready the moment its last selected parent finishes —
+        dbt's GraphQueue + ThreadPool executor
         ($DBT/dbt/task/runnable.py:437-440). Spark sessions are
         thread-safe for concurrent job submission — on a real cluster
         this overlaps the cluster-idle gaps between dependent stages,
         which serial execution leaves on the table whenever the DAG has
         parallel branches (each table write uses only its own shuffle's
-        worth of executors).
+        worth of executors). When a slot frees, the ready node that
+        comes first in :meth:`run`'s topological order starts, so
+        ``threads=1`` is exactly :meth:`run`.
 
         Failure semantics mirror :meth:`run` (fail-fast): the first
         node error propagates; already-running siblings finish, nothing
@@ -286,11 +263,66 @@ class Engine:
         environment's warehouse too (dbt applies --defer uniformly
         regardless of --threads). The armed defer state is read-only
         during the pass, so worker threads share it safely."""
-        import concurrent.futures
+        return self._schedule(
+            select, exclude, selector, state=state, defer=defer,
+            favor_state=favor_state, empty=empty, threads=threads,
+        )
 
+    def _schedule(
+        self,
+        select: str | None,
+        exclude: str | None,
+        selector: str | None = None,
+        state: dict | None = None,
+        defer: str | None = None,
+        favor_state: bool = False,
+        empty: bool = False,
+        threads: int = 1,
+        keep_going: bool = False,
+        post_step: Callable[[str, MaterializedRelation], str | None] | None = None,
+    ) -> dict:
+        """The one DAG scheduler behind :meth:`run`,
+        :meth:`run_concurrent`, :meth:`run_keep_going` and :meth:`build`.
+
+        At most ``threads`` nodes are in flight; when a slot frees, the
+        ready node that comes first in the topological order starts, so
+        ``threads=1`` runs nodes one at a time on the calling thread in
+        that order. ``post_step(name, rel)`` runs after each node's
+        write; a returned message marks the node ``fail``.
+
+        Fail-fast (default): after the first error nothing new starts,
+        in-flight nodes finish and are recorded, the error is re-raised
+        and ``on_run_end`` does not fire; returns the built relations.
+        ``keep_going``: an ``error`` or ``fail`` node's descendants are
+        marked ``skipped`` while independent branches build; returns
+        :class:`NodeResult` per node, also kept for :meth:`retry`."""
         select, exclude = self._resolve_selection(select, exclude, selector)
         selected = self.registry.select(select, exclude=exclude, state=state)
         self.registry.invalidate()
+        order = [
+            n
+            for n in self.registry.topological_order(
+                selected if (select or exclude) else None
+            )
+            if n in selected
+        ]
+        rank = {n: i for i, n in enumerate(order)}
+        graph = self.registry.graph()
+        waiting = {n: {p for p in graph[n] if p in selected} for n in order}
+        children: dict[str, list[str]] = {n: [] for n in order}
+        for n in order:
+            for p in waiting[n]:
+                children[p].append(n)
+        ready = [rank[n] for n in order if not waiting[n]]  # heap of ranks
+
+        def work(name: str) -> tuple[MaterializedRelation, str | None]:
+            rel = self._materialize_node(name)
+            return rel, post_step(name, rel) if post_step else None
+
+        built: dict[str, MaterializedRelation] = {}
+        results: dict[str, NodeResult] = {}
+        failure: Exception | None = None
+        running: dict[Future, str] = {}
         if defer is not None:
             self.registry.set_defer(
                 defer, selected,
@@ -298,51 +330,58 @@ class Engine:
             )
         if empty:
             self.registry.set_empty(True)
-        graph = self.registry.graph()
-        deps = {n: {p for p in graph.get(n, ()) if p in selected} for n in selected}
-        children: dict[str, set[str]] = {n: set() for n in selected}
-        for n, ps in deps.items():
-            for p in ps:
-                children[p].add(n)
-        self._run_hooks(getattr(self, "on_run_start", None))
-        out: dict[str, MaterializedRelation] = {}
-        futures: dict = {}
-        pending = {n for n in selected if deps[n]}
-        failure: Exception | None = None
+        threads = max(threads, 1)
+        # a serial run stays on the calling thread: Spark local properties
+        # (job group, scheduler pool) are per thread, and run() keeps them
+        pool = ThreadPoolExecutor(max_workers=threads) if threads > 1 else None
         try:
-            with concurrent.futures.ThreadPoolExecutor(max_workers=threads) as pool:
-                for n in sorted(selected - pending):  # deterministic submit order
-                    futures[pool.submit(self._materialize_node, n)] = n
-                while futures:
-                    done, _ = concurrent.futures.wait(
-                        futures, return_when=concurrent.futures.FIRST_COMPLETED
-                    )
-                    for fut in done:
-                        name = futures.pop(fut)
-                        try:
-                            rel = fut.result()
-                        except Exception as exc:
+            self._run_hooks(getattr(self, "on_run_start", None))
+            while running or (ready and failure is None):
+                while ready and len(running) < threads and failure is None:
+                    name = order[heapq.heappop(ready)]
+                    fut = pool.submit(work, name) if pool else _call_now(work, name)
+                    running[fut] = name
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in sorted(done, key=lambda f: rank[running[f]]):
+                    name = running.pop(fut)
+                    try:
+                        rel, failed = fut.result()
+                    except Exception as exc:
+                        if not keep_going:
                             failure = failure or exc
-                            continue  # drain in-flight; submit nothing new
-                        out[name] = rel
-                        self.relations[name] = rel
-                        if failure is not None:
-                            continue
-                        for c in sorted(children.get(name, ())):
-                            deps[c].discard(name)
-                            if not deps[c] and c in pending:
-                                pending.discard(c)
-                                futures[pool.submit(self._materialize_node, c)] = c
+                        results[name] = NodeResult(
+                            name, "error", f"{type(exc).__name__}: {exc}"[:200]
+                        )
+                        continue
+                    built[name] = self.relations[name] = rel
+                    if failed:
+                        results[name] = NodeResult(name, "fail", failed[:200])
+                        continue
+                    results[name] = NodeResult(name, "success", None)
+                    for c in children[name]:
+                        waiting[c].discard(name)
+                        if not waiting[c]:
+                            heapq.heappush(ready, rank[c])
         finally:
+            if pool is not None:
+                pool.shutdown()
             if defer is not None:
                 self.registry.clear_defer()
             if empty:
+                # disarm AND drop memoized empty frames — a later real
+                # run must rebuild, never consume a dry-run slice
                 self.registry.clear_empty()
                 self.registry.invalidate()
         if failure is not None:
             raise failure
         self._run_hooks(getattr(self, "on_run_end", None))
-        return out
+        if not keep_going:
+            return {n: built[n] for n in order if n in built}
+        # nodes never dispatched sit below a failure; dbt keeps this
+        # run-results artifact so `dbt retry` replays errored/skipped nodes
+        results = {n: results.get(n, NodeResult(n, "skipped", None)) for n in order}
+        self._last_run_results = dict(results)
+        return results
 
     def register_operation(self, name: str, fn: Callable) -> None:
         """Register a named operation (dbt macro analogue) invocable via
@@ -805,24 +844,26 @@ class Engine:
     ) -> list[TestResult]:
         select, exclude = self._resolve_selection(select, exclude, selector)
         selected = self.registry.select(select, exclude=exclude, state=state)
-        results = []
-        for spec in self.tests:
-            if spec.model not in selected:
-                continue
-            df = self.registry.build(spec.model)
-            failing = spec.builder(df, self)
-            store = (
-                f"{self.warehouse_dir}/_test_failures/{spec.name}"
-                if spec.store_failures
-                else None
-            )
-            results.append(
-                evaluate_test(
-                    spec.name, failing, spec.warn_if, spec.error_if, store,
-                    fail_calc=spec.fail_calc, limit=spec.limit,
-                )
-            )
-        return results
+        return [
+            self._evaluate_spec(spec, self.registry.build(spec.model))
+            for spec in self.tests
+            if spec.model in selected
+        ]
+
+    def _evaluate_spec(self, spec: TestSpec, df: DataFrame) -> TestResult:
+        """One declared test over its model's frame: the failing rows
+        (stored under ``_test_failures/<name>`` when ``store_failures``
+        is set), then the warn/error verdict under ``fail_calc`` and
+        ``limit``. Shared by :meth:`test` and :meth:`build`."""
+        store = (
+            f"{self.warehouse_dir}/_test_failures/{spec.name}"
+            if spec.store_failures
+            else None
+        )
+        return evaluate_test(
+            spec.name, spec.builder(df, self), spec.warn_if, spec.error_if,
+            store, fail_calc=spec.fail_calc, limit=spec.limit,
+        )
 
     # -- keep-going run (dbt's default node scheduling: a failed node
     # marks its DESCENDANTS skipped but unrelated subtrees still build;
@@ -835,37 +876,7 @@ class Engine:
         descendant is marked ``skipped``, and independent branches keep
         building. Returns per-node status — the dbt run-results shape
         (also retained for :meth:`retry`)."""
-        selected = self.registry.select(select, exclude=exclude)
-        self.registry.invalidate()
-        order = self.registry.topological_order(
-            selected if (select or exclude) else None
-        )
-        graph = self.registry.graph()
-        self._run_hooks(getattr(self, "on_run_start", None))
-        results: dict[str, NodeResult] = {}
-        dead: set[str] = set()
-        for name in order:
-            if name not in selected:
-                continue
-            parents = [p for p in graph.get(name, ()) if p in selected]
-            if any(p in dead for p in parents):
-                results[name] = NodeResult(name, "skipped", None)
-                dead.add(name)
-                continue
-            try:
-                rel = self._materialize_node(name)
-                self.relations[name] = rel
-                results[name] = NodeResult(name, "success", None)
-            except Exception as exc:
-                results[name] = NodeResult(
-                    name, "error", f"{type(exc).__name__}: {exc}"[:200]
-                )
-                dead.add(name)
-        self._run_hooks(getattr(self, "on_run_end", None))
-        # run-results artifact for retry (dbt writes run_results.json;
-        # `dbt retry` replays its errored/skipped nodes)
-        self._last_run_results = dict(results)
-        return results
+        return self._schedule(select, exclude, keep_going=True)
 
     def build(
         self, select: str | None = None, exclude: str | None = None,
@@ -879,69 +890,34 @@ class Engine:
         before it can consume bad data. Independent branches keep going.
         This is dbt-core's build task semantics (tests as first-class
         DAG nodes gating their model's children). Statuses: ``success``
-        / ``error`` (build raised) / ``fail`` (a test failed) /
-        ``skipped``."""
-        from .operators.dq import TestStatus
+        / ``error`` (the build or a test's evaluation raised) / ``fail``
+        (a test failed) / ``skipped``."""
 
-        select, exclude = self._resolve_selection(select, exclude, selector)
-        selected = self.registry.select(select, exclude=exclude)
-        self.registry.invalidate()
-        order = self.registry.topological_order(
-            selected if (select or exclude) else None
-        )
-        graph = self.registry.graph()
-        tests_by_model: dict[str, list[TestSpec]] = {}
-        for spec in self.tests:
-            tests_by_model.setdefault(spec.model, []).append(spec)
-        self._run_hooks(getattr(self, "on_run_start", None))
-        results: dict[str, NodeResult] = {}
-        dead: set[str] = set()
-        for name in order:
-            if name not in selected:
-                continue
-            parents = [p for p in graph.get(name, ()) if p in selected]
-            if any(p in dead for p in parents):
-                results[name] = NodeResult(name, "skipped", None)
-                dead.add(name)
-                continue
-            try:
-                rel = self._materialize_node(name)
-                self.relations[name] = rel
-            except Exception as exc:
-                results[name] = NodeResult(
-                    name, "error", f"{type(exc).__name__}: {exc}"[:200]
-                )
-                dead.add(name)
-                continue
+        def gate(name: str, rel: MaterializedRelation) -> str | None:
             failed = []
-            for spec in tests_by_model.get(name, ()):
-                failing = spec.builder(rel.df, self)
-                res = evaluate_test(
-                    spec.name, failing,
-                    warn_if=spec.warn_if, error_if=spec.error_if,
-                    fail_calc=spec.fail_calc, limit=spec.limit,
-                )
+            for spec in self.tests:
+                if spec.model != name:
+                    continue
+                res = self._evaluate_spec(spec, rel.df)
                 if res.status == TestStatus.ERROR:
                     failed.append(f"{spec.name} ({res.failures} failing rows)")
-            if failed:
-                results[name] = NodeResult(name, "fail", "; ".join(failed)[:200])
-                dead.add(name)
-            else:
-                results[name] = NodeResult(name, "success", None)
-        self._run_hooks(getattr(self, "on_run_end", None))
-        self._last_run_results = dict(results)
-        return results
+            return "; ".join(failed) or None
+
+        return self._schedule(
+            select, exclude, selector, keep_going=True, post_step=gate
+        )
 
     def retry(self) -> dict[str, "NodeResult"]:
         """``dbt retry``: re-run exactly the nodes the previous
-        :meth:`run_keep_going` left ``error`` or ``skipped`` — completed
-        successes are not rebuilt (dbt-core task/retry.py semantics,
-        driven by the retained run-results). Returns the new per-node
-        results for the retried subset and folds them into the retained
+        :meth:`run_keep_going` or :meth:`build` left ``error`` or
+        ``skipped`` — completed successes are not rebuilt (dbt-core
+        task/retry.py semantics, driven by the retained run-results).
+        The replay is a :meth:`run_keep_going` of that subset. Returns
+        the new per-node results and folds them into the retained
         artifact so ``retry()`` can be chained until green."""
         last = getattr(self, "_last_run_results", None)
         if not last:
-            raise ValueError("retry() requires a prior run_keep_going()")
+            raise ValueError("retry() requires a prior run_keep_going() or build()")
         redo = sorted(
             n for n, r in last.items() if r.status in ("error", "skipped")
         )
@@ -974,14 +950,9 @@ class Engine:
         prev_fr = getattr(self, "full_refresh", False)
         self.full_refresh = full_refresh or prev_fr
         try:
-            kwargs = dict(
-                select=select, exclude=exclude, state=state, defer=defer,
+            relations = self.run_concurrent(
+                select, exclude, threads, state=state, defer=defer,
                 favor_state=favor_state, selector=selector, empty=empty,
-            )
-            relations = (
-                self.run_concurrent(threads=threads, **kwargs)
-                if threads > 1
-                else self.run(**kwargs)
             )
         finally:
             self.full_refresh = prev_fr
@@ -1184,12 +1155,24 @@ class Engine:
         return manifest
 
 
+def _call_now(fn: Callable, *args) -> Future:
+    """Run ``fn`` on the calling thread and return its outcome as a
+    completed future — the scheduler's dispatch when ``threads=1``."""
+    fut: Future = Future()
+    try:
+        fut.set_result(fn(*args))
+    except Exception as exc:
+        fut.set_exception(exc)
+    return fut
+
+
 @dataclass
 class NodeResult:
-    """Per-node outcome of :meth:`Engine.run_keep_going`."""
+    """Per-node outcome of :meth:`Engine.run_keep_going` and
+    :meth:`Engine.build`."""
 
     node: str
-    status: str  # success | error | skipped
+    status: str  # success | error | skipped, and fail (build: a test failed)
     error: str | None
 
 

@@ -823,3 +823,118 @@ class TestInterleavedBuild:
         res = eng.build()
         assert res["stg"].status == "success"
         assert res["mart"].status == "success"
+
+    def test_store_failures_persists_failing_rows_like_test(self, spark, tmp_path):
+        """build()'s test gate honours ``store_failures`` exactly as
+        test() does: the failing rows land in ``_test_failures/<name>``."""
+        eng = self._engine(spark, tmp_path, bad_stg=True)
+        eng.tests[0].store_failures = True
+        res = eng.build()
+        assert res["stg"].status == "fail"
+        stored = spark.read.parquet(
+            str(tmp_path / "wh" / "_test_failures" / "unique_stg_k")
+        )
+        assert [(r.unique_field, r.n_records) for r in stored.collect()] == [(2, 2)]
+
+    def test_erroring_test_marks_node_error_and_skips_descendants(self, spark, tmp_path):
+        """A test whose evaluation raises gates like a failing one: the
+        node is ``error``, its descendants skip, other branches build."""
+        eng = self._engine(spark, tmp_path)
+
+        def boom(df):
+            raise RuntimeError("test query failed")
+
+        eng.test_singular("boom_stg", "stg", boom)
+        res = eng.build()
+        assert res["stg"].status == "error"
+        assert "test query failed" in res["stg"].error
+        assert res["mart"].status == "skipped"
+        assert res["side"].status == "success"
+
+
+def test_keep_going_and_retry_honour_default_selector(spark, tmp_path):
+    """A default selector scopes every run with no explicit selection
+    (dbt ``default: true``), run_keep_going() included; retry() then
+    replays exactly the errored and skipped nodes of that run."""
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.registry.register_source("src", spark.createDataFrame([(1,)], "id long"))
+    state = {"broken": True}
+
+    def flaky(ctx):
+        if state["broken"]:
+            raise RuntimeError("transient failure")
+        return ctx.ref("src")
+
+    eng.registry.register("a", flaky)
+    eng.registry.register("a_child", "select * from {{ ref('a') }}")
+    eng.registry.register("b", "select id from {{ ref('src') }}")
+    eng.define_selector("a_tree", "a+", default=True)
+
+    first = eng.run_keep_going()
+    assert {n: r.status for n, r in first.items()} == {
+        "a": "error", "a_child": "skipped",
+    }
+    state["broken"] = False
+    second = eng.retry()
+    assert {n: r.status for n, r in second.items()} == {
+        "a": "success", "a_child": "success",
+    }
+    assert sorted(eng.run()) == sorted(eng.build()) == ["a", "a_child"]
+
+
+def test_scheduler_order_and_results_independent_of_threads(spark, tmp_path):
+    """run() and run_concurrent(threads=1) start nodes in the same
+    topological order; threads=4 builds identical relations on a
+    diamond DAG (stg -> {left, right} -> joined)."""
+
+    def engine(wh, started):
+        eng = Engine(spark, str(tmp_path / wh))
+        eng.registry.register_source("src", spark.range(0, 20))
+
+        def reg(name, sql, **kw):
+            eng.registry.register(
+                name, sql, pre_hook=lambda s, e: started.append(name), **kw
+            )
+
+        reg("z_root", "select id from {{ ref('src') }}")
+        reg("m_mid", "select id * 2 as id from {{ ref('src') }}")
+        reg("a_leaf", "select id + 1 as id from {{ ref('z_root') }}")
+        reg("b_leaf", "select id - 1 as id from {{ ref('m_mid') }}")
+        return eng
+
+    serial, threaded = [], []
+    eng = engine("wh_serial", serial)
+    eng.run()
+    engine("wh_threads1", threaded).run_concurrent(threads=1)
+    assert serial == threaded == eng.registry.topological_order()
+    assert serial == ["z_root", "m_mid", "a_leaf", "b_leaf"]
+
+    def diamond(wh):
+        eng = Engine(spark, str(tmp_path / wh))
+        eng.registry.register_source(
+            "src", spark.range(0, 50).select("id", (F.col("id") % 5).alias("k"))
+        )
+        eng.registry.register("stg", "select * from {{ ref('src') }}")
+        eng.registry.register(
+            "left", "select k, sum(id) as s from {{ ref('stg') }} group by k",
+            materialized="table",
+        )
+        eng.registry.register(
+            "right", "select k, count(*) as n from {{ ref('stg') }} group by k",
+            materialized="table",
+        )
+        eng.registry.register(
+            "joined",
+            "select l.k, l.s, r.n from {{ ref('left') }} l "
+            "join {{ ref('right') }} r on l.k = r.k",
+            materialized="table",
+        )
+        return eng
+
+    def rows(out):
+        return {n: sorted(rel.df.collect()) for n, rel in out.items()}
+
+    one = diamond("wh_d1").run()
+    four = diamond("wh_d4").run_concurrent(threads=4)
+    assert list(one) == list(four) == ["stg", "left", "right", "joined"]
+    assert rows(one) == rows(four)
