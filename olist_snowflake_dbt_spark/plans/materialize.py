@@ -244,11 +244,11 @@ class DynamicTable:
         merge every emitted update into the table. ``checkpoint=None``
         forces a FULL refresh (fresh checkpoint → full source replay).
 
-        ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for
-        the stream's lifetime — the count is baked into the checkpoint
-        at first start and each partition pays a state-store instance,
-        so size it to state volume (#group keys), not the batch default
-        (same rule as streaming/events.run_available_now)."""
+        ``state_partitions`` sizes the stream's state shuffle to state
+        volume (#group keys), not the batch default; the cap and
+        checkpoint rules are :func:`streaming.events._drain`'s."""
+        from ..streaming.events import _drain
+
         table = self._table
         key_cols = self.key_cols
 
@@ -256,22 +256,8 @@ class DynamicTable:
             table.apply(batch_df, strategy="merge", unique_key=key_cols)
 
         ckpt = checkpoint or f"{self.path}.ckpt-{uuid.uuid4().hex[:8]}"
-        old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            if state_partitions is not None:
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(state_partitions)
-                )
-            q = (
-                result_stream.writeStream.outputMode("update")
-                .foreachBatch(_merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", old)
+        writer = result_stream.writeStream.foreachBatch(_merge_batch)
+        _drain(self.spark, writer.outputMode("update"), ckpt, state_partitions)
         if checkpoint is None:
             shutil.rmtree(ckpt, ignore_errors=True)
 

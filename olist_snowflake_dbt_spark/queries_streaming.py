@@ -28,6 +28,7 @@ from .streaming import (
     user_running_totals,
     windowed_event_counts,
 )
+from .streaming.events import _drain
 
 
 @query(
@@ -259,8 +260,6 @@ def q_stream_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RocksDBStateStoreProvider",
     )
     try:
-        from .streaming import run_available_now
-
         return run_available_now(
             user_totals_tws(stream_events(spark, sf_dir)),
             "update",
@@ -299,8 +298,6 @@ def q_stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
     import shutil
     import tempfile
 
-    from .streaming import stream_events
-
     base = os.path.join(
         tempfile.gettempdir(), f"spark_graft_stream_sink_{os.getpid()}"
     )
@@ -311,15 +308,8 @@ def q_stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
 
     src = stream_events(spark, sf_dir).select("event_id", "event_type")
     for _ in range(2):  # second start: offsets committed -> writes nothing
-        q = (
-            src.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer = src.writeStream.format("parquet").option("path", out_dir)
+        _drain(spark, writer.outputMode("append"), ckpt)
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -388,11 +378,11 @@ def q_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(log_dir)
     )
-    q = cdc_apply_stream(
+    writer = cdc_apply_stream(
         stream, state, ckpt, ["user_id"], "lsn", "op",
         state_partitions=8, n_buckets=8,
-    ).start()
-    q.awaitTermination()
+    )
+    _drain(spark, writer, ckpt)
     return cdc_state(spark, state, "op")
 
 
@@ -444,17 +434,9 @@ def q_stream_file_ingest_native(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      "c_name": row.c_name}) + "\n")
 
     def drain() -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .json(land)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        src = spark.readStream.schema(schema).json(land)
+        writer = src.writeStream.format("parquet").option("path", out_dir)
+        _drain(spark, writer.outputMode("append"), ckpt)
 
     drop_batch(0)
     drop_batch(1)
@@ -657,10 +639,8 @@ def q_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every other harness stream uses (the ~130k-row micro-batches pay
     # 32-task shuffle overhead otherwise); admission output is
     # partitioning-independent (exact dedup by fingerprint)
-    q = dedup_admission_stream(
-        stream, state, ckpt, state_partitions=8
-    ).start()
-    q.awaitTermination()
+    writer = dedup_admission_stream(stream, state, ckpt, state_partitions=8)
+    _drain(spark, writer, ckpt)
     assert n == spark.read.parquet(stage).count()
     # fp_bucket is the state's physical hash-partition key, not part
     # of the admission contract the oracle checks

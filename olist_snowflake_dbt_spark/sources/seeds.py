@@ -18,7 +18,7 @@ zeros (zip prefix "01037" → 1037) — SURVEY.md §1.3.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,6 +30,12 @@ _DATETIME_RE = r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}$"
 _ISODATETIME_RE = r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:?\d{2})?$"
 
 _NULL_LITERALS = ("", "null")
+
+
+def _col(name: str) -> Column:
+    """The column named ``name`` verbatim: a dot in a CSV header is part
+    of the name, not struct-field access."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _read_raw_strings(spark: SparkSession, path: str) -> DataFrame:
@@ -55,7 +61,7 @@ def _read_raw_strings(spark: SparkSession, path: str) -> DataFrame:
             df = df.withColumnRenamed(old, new)
     for c in df.columns:
         df = df.withColumn(
-            c, F.when(F.lower(F.col(c)).isin(*_NULL_LITERALS), None).otherwise(F.col(c))
+            c, F.when(F.lower(_col(c)).isin(*_NULL_LITERALS), None).otherwise(_col(c))
         )
     return df
 
@@ -65,7 +71,7 @@ def infer_seed_schema(raw: DataFrame) -> T.StructType:
     type every non-null value satisfies (agate_helper.py:59-76 precedence)."""
     aggs = []
     for c in raw.columns:
-        col = F.col(c)
+        col = _col(c)
         nn = col.isNotNull()
         for key, rx in (
             ("int", _INT_RE),
@@ -141,7 +147,7 @@ def read_seed_csv(
         )
     cols = []
     for f in st.fields:
-        src = F.col(f.name)
+        src = _col(f.name)
         if isinstance(f.dataType, T.BooleanType):
             cast = F.when(F.lower(src) == "true", F.lit(True)).when(
                 F.lower(src) == "false", F.lit(False)

@@ -17,11 +17,13 @@ from __future__ import annotations
 import itertools
 import os
 from typing import Iterable
+from urllib.parse import urlparse
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -309,6 +311,69 @@ def user_running_totals(stream: DataFrame) -> DataFrame:
 # -- bounded-replay runner --------------------------------------------
 
 
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    checkpoint: str | None = None,
+    state_partitions: int | None = None,
+    process_all: bool = False,
+) -> StreamingQuery:
+    """Run one bounded streaming query to completion; every bounded
+    drain in the package goes through here. For the query's lifetime:
+
+    - shuffle partitions are ``state_partitions`` capped at
+      ``defaultParallelism``: each state partition is a task per batch
+      with a fixed state-store commit and Python-worker cost, so wider
+      only adds task waves. A restart reuses the count recorded in the
+      checkpoint, so the cap acts on first starts only.
+    - a local checkpoint (the memory sink's temporary one, or a ``file:``
+      or schemeless path under a ``file:///`` default FS) uses the
+      FileSystem checkpoint manager unless the session sets one. Without
+      Hadoop native IO, FileContext forks ``chmod``/``readlink`` per
+      checkpoint file; on ``file://`` both do the same check-then-rename.
+
+    It waits on AvailableNow, or with ``process_all`` on
+    ``processAllAvailable()`` + ``stop()`` (Python data-source readers),
+    and restores both confs when the query ends or fails. Returns the
+    terminated query (its progress is kept)."""
+    conf = spark.conf
+    old_partitions = conf.get("spark.sql.shuffle.partitions")
+    path = checkpoint or conf.get("spark.sql.streaming.checkpointLocation", None)
+    scheme = urlparse(path or "/").scheme or urlparse(
+        spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+    ).scheme
+    set_manager = scheme == "file" and conf.get(_CHECKPOINT_MANAGER, None) is None
+    try:
+        if state_partitions is not None:
+            cap = min(state_partitions, spark.sparkContext.defaultParallelism)
+            conf.set("spark.sql.shuffle.partitions", str(cap))
+        if set_manager:
+            conf.set(_CHECKPOINT_MANAGER, _FS_CHECKPOINT_MANAGER)
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        if not process_all:
+            writer = writer.trigger(availableNow=True)
+        q = writer.start()
+        if process_all:
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        q.awaitTermination()
+        return q
+    finally:
+        conf.set("spark.sql.shuffle.partitions", old_partitions)
+        if set_manager:
+            conf.unset(_CHECKPOINT_MANAGER)
+
+
 def run_available_now(
     result: DataFrame,
     output_mode: str = "complete",
@@ -321,30 +386,12 @@ def run_available_now(
     real streaming query (state store, watermarks, micro-batches) and
     terminates. Production uses the same plan with a durable sink.
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for
-    the stream's lifetime: the partition count is BAKED into the state
-    checkpoint at first start, and each partition pays a state-store
-    instance — size it to state volume (keys), not to the batch shuffle
-    default. At test scale 8 partitions runs ~4x faster than 32; on a
-    real cluster you'd size it to total cores once and keep it for the
-    checkpoint's life."""
-    spark = result.sparkSession
+    ``state_partitions`` sizes the stream's state shuffle; see
+    :func:`_drain` for the cap and checkpoint rules."""
     name = name or f"stream_sink_{os.getpid()}_{next(_sink_counter)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+    writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _drain(result.sparkSession, writer, None, state_partitions)
+    return result.sparkSession.table(name)
 
 
 def run_process_all(
@@ -361,26 +408,10 @@ def run_process_all(
     micro-batch, while processAllAvailable keeps cycling micro-batches
     until the source's offset stops advancing — the correct
     drain-a-bounded-cursor semantics."""
-    spark = result.sparkSession
     name = name or f"stream_sink_{os.getpid()}_{next(_sink_counter)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+    writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _drain(result.sparkSession, writer, None, state_partitions, process_all=True)
+    return result.sparkSession.table(name)
 
 
 # -- transformWithStateInPandas (Spark 4 stateful API) -----------------

@@ -76,6 +76,19 @@ def test_seed_to_parquet_roundtrip(spark, tmp_path):
     assert out2.count() == 3
 
 
+def test_header_with_dot_or_backtick_is_one_column_name(spark, tmp_path):
+    """A dot in a header is part of the name (dbt's agate loader takes
+    ``order.id`` as is), not struct-field access on ``order``."""
+    path = _write(tmp_path, "order.id,amount,note`x\n1,1.50,a\n2,null,b\n", "dot.csv")
+    out = seed_to_parquet(spark, path, str(tmp_path / "wh"), "dot_seed")
+    assert out.columns == ["order.id", "amount", "note`x"]
+    assert [f.dataType for f in out.schema.fields] == [
+        T.LongType(), T.DecimalType(38, 2), T.StringType()]
+    rows = sorted(tuple(r) for r in out.collect())
+    assert [(r[0], r[2]) for r in rows] == [(1, "a"), (2, "b")]
+    assert str(rows[0][1]) == "1.50" and rows[1][1] is None
+
+
 def test_column_types_override_preserves_leading_zeros(spark, tmp_path):
     """dbt seed +column_types (helpers.sql create_csv_table): a listed
     column takes the configured type verbatim — the canonical fix for

@@ -826,3 +826,85 @@ def test_cdc_bucketed_state_matches_legacy_and_rewrites_only_touched(
         for r in cdc_state(spark, state2, "op").collect()
     }
     assert again == bucketed
+
+
+# -- the bounded drain routine (streaming/events._drain) ----------------
+
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _batch_confs(seen):
+    """foreachBatch body recording the confs each batch's session ran with."""
+    def record(batch_df, _batch_id):
+        conf = batch_df.sparkSession.conf
+        seen.append((conf.get(_MANAGER, None), conf.get("spark.sql.shuffle.partitions")))
+    return record
+
+
+def test_drain_scopes_and_restores_confs_on_success_and_failure(spark, sf_dir, tmp_path):
+    from pyspark.errors import StreamingQueryException
+
+    from olist_snowflake_dbt_spark.streaming.events import _drain
+
+    def fail(_batch_df, _batch_id):
+        raise RuntimeError("planted batch failure")
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    src = stream_events(spark, sf_dir).select("event_id")
+    seen = []
+    _drain(spark, src.writeStream.foreachBatch(_batch_confs(seen)),
+           str(tmp_path / "ok"), state_partitions=2)
+    assert seen == [(_CHECKPOINTING + "FileSystemBasedCheckpointFileManager", "2")]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get(_MANAGER, None) is None
+
+    with pytest.raises(StreamingQueryException, match="planted batch failure"):
+        _drain(spark, src.writeStream.foreachBatch(fail),
+               str(tmp_path / "fail"), state_partitions=2)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get(_MANAGER, None) is None
+
+
+def test_drain_leaves_user_checkpoint_manager_alone(spark, sf_dir, tmp_path):
+    from olist_snowflake_dbt_spark.streaming.events import _drain
+
+    user_manager = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
+    src = stream_events(spark, sf_dir).select("event_id")
+    seen = []
+    spark.conf.set(_MANAGER, user_manager)
+    try:
+        _drain(spark, src.writeStream.foreachBatch(_batch_confs(seen)),
+               str(tmp_path / "ckpt"))
+        assert spark.conf.get(_MANAGER) == user_manager
+    finally:
+        spark.conf.unset(_MANAGER)
+    assert [manager for manager, _ in seen] == [user_manager]
+
+
+def test_drain_caps_state_partitions_at_task_slots(spark, sf_dir):
+    """A state shuffle wider than the cores only adds task waves: asking
+    for more partitions than ``defaultParallelism`` runs with exactly
+    ``defaultParallelism``, and the rows equal an uncapped run's."""
+    from olist_snowflake_dbt_spark.streaming.events import _drain
+
+    slots = spark.sparkContext.defaultParallelism
+    counts = windowed_event_counts(stream_events(spark, sf_dir), "15 minutes")
+
+    def drain(name, state_partitions):
+        writer = counts.writeStream.format("memory").queryName(name)
+        q = _drain(spark, writer.outputMode("complete"),
+                   state_partitions=state_partitions)
+        parts = {op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]}
+        return parts, sorted(spark.table(name).collect())
+
+    capped_parts, capped = drain("drain_capped", slots + 3)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(slots + 3))
+    try:  # no state_partitions: the session's width, uncapped
+        uncapped_parts, uncapped = drain("drain_uncapped", None)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert capped_parts == {slots}
+    assert uncapped_parts == {slots + 3}
+    assert capped == uncapped and capped
