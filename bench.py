@@ -10,6 +10,7 @@ real pipeline would write to storage).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -24,19 +25,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from olist_snowflake_dbt_spark.session import get_spark
     from olist_snowflake_dbt_spark.queries import QUERIES
+    from tools.measure import time_noop, warm
 
     spark = get_spark("bench")
-    # warm the JVM, codegen paths, and parquet footers once so per-query
-    # times measure the queries, not session startup: one tiny scan per
-    # input table (footer + vectorized-reader init) plus a trivial job
-    spark.range(1).count()
-    from olist_snowflake_dbt_spark.sources.readers import TESTDATA_TABLES, read_table
-
-    for t in TESTDATA_TABLES:
-        try:
-            read_table(spark, sf_dir, t).limit(1).count()
-        except Exception:
-            pass
+    warm(spark, sf_dir)
 
     # Canary: a fixed synthetic probe (range → hash agg → noop) whose
     # CODE never changes across rounds, interleaved every ~20 queries.
@@ -80,44 +72,15 @@ def main() -> None:
         if qi and qi % _CANARY_EVERY == 0:
             canary_times.append(run_canary())
         canary_of[name] = len(canary_times) - 1
-        best: float | None = None
-        failed = False
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                elapsed = time.perf_counter() - t0
-                raw_runs.setdefault(name, []).append(round(elapsed, 3))
-                best = elapsed if best is None else min(best, elapsed)
-            except Exception as exc:  # a broken query must not sink the run
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-                print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
-                # a query that fails on ANY run is an error, not a timing —
-                # never report it in both maps
-                failed = True
-            finally:
-                # cleanup runs even after a failed attempt, so its cached
-                # intermediates / broadcast state never pollute the next
-                # query's timing.
-                # Operators persist self-join intermediates for the
-                # duration of their query; drop them so 140+ queries'
-                # caches don't stack.
-                spark.catalog.clearCache()
-                # broadcast blocks and shuffle state are only reclaimed by
-                # the ContextCleaner after a JVM GC; without this, queries
-                # ~30+ in the run measure 10-20x slower than their true
-                # cost (measured: dedup_simhash 54s polluted vs 3s clean).
-                # Session-level periodicGC (session.py) covers production;
-                # the explicit call makes per-query timings deterministic.
-                try:
-                    spark.sparkContext._jvm.System.gc()
-                except Exception:
-                    pass
-            if failed:
-                break
-        if best is not None and not failed:
-            timings[name] = round(best, 3)
+        try:
+            t = time_noop(spark, functools.partial(fn, spark, sf_dir), n_runs)
+        except Exception as exc:  # a broken query must not sink the run
+            # a query that fails on ANY run is an error, not a timing —
+            # never report it in both maps
+            errors[name] = f"{type(exc).__name__}: {exc}"[:200]
+            print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
+        else:
+            timings[name], raw_runs[name] = t["min"], t["runs"]
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
@@ -174,7 +137,9 @@ def main() -> None:
         # so round-over-round comparisons can use the full catalog at
         # matched cores instead of the truncated stdout line. Additive:
         # the one-line stdout contract and BENCH_DETAIL.json unchanged.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32").strip() or "32"
+        # The count is the parallelism the run used, so local[*] names
+        # the file by its real core count.
+        cpus = spark.sparkContext.defaultParallelism
         with open(os.path.join(repo_dir,
                                f"BENCH_DETAIL_c{cpus}.json"), "w") as fh:
             json.dump(detail, fh, indent=1, sort_keys=True)

@@ -28,7 +28,7 @@ def test_lane_covers_the_catalog():
     assert len(missing) <= MAX_UNMEASURED, (
         f"{len(missing)} registered queries have no SCALING.json entry "
         f"(> {MAX_UNMEASURED}): {missing[:15]} — run tools/scale_bench.py "
-        f"--merge --only <names>"
+        f"--only <names>"
     )
 
 

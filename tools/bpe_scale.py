@@ -35,6 +35,8 @@ sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
 
+from tools.measure import cleanup, warm, write_scaling  # noqa: E402
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -48,7 +50,7 @@ def main() -> None:
     from olist_snowflake_dbt_spark.sources.readers import read_table
 
     spark = get_spark("bpe_scale")
-    spark.range(1).count()
+    warm(spark)
 
     calls = {"n": 0}
     real_pair_freqs = tok.pair_freqs
@@ -65,11 +67,7 @@ def main() -> None:
         t0 = time.perf_counter()
         n_merges = fn(docs, "text", args.merges, args.min_freq, **kw).count()
         wall = round(time.perf_counter() - t0, 1)
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+        cleanup(spark)
         return {"rounds": calls["n"], "merges": n_merges, "wall_sec": wall}
 
     sf01 = "/root/testdata/sf0.1"
@@ -88,13 +86,8 @@ def main() -> None:
         out["sf0.1_sequential"] = run(tok.bpe_train, sf01)
         print("sf0.1_sequential", out["sf0.1_sequential"], flush=True)
 
-    path = os.path.join(REPO, "SCALING.json")
-    with open(path) as fh:
-        scaling = json.load(fh)
-    entry = scaling["queries"].setdefault("tokenizer_bpe_train_batched", {})
-    entry[f"merge_budget_{args.merges}"] = out
-    with open(path, "w") as fh:
-        json.dump(scaling, fh, indent=1, sort_keys=True)
+    write_scaling({"tokenizer_bpe_train_batched": out},
+                  lane=f"merge_budget_{args.merges}")
     print(json.dumps({f"merge_budget_{args.merges}": out}))
 
 

@@ -42,12 +42,13 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
+
+from tools.measure import SCALING_PATH, time_noop, warm, write_scaling  # noqa: E402
 
 FACTOR = 8
 
@@ -69,7 +70,7 @@ def main() -> None:
     from olist_snowflake_dbt_spark.session import get_spark
 
     spark = get_spark("cap_zipf")
-    spark.range(1).count()
+    warm(spark)
 
     def fixture(n: int):
         """~n/2 rows on ONE hot host, n/2 spread over 1000 cold hosts."""
@@ -94,20 +95,10 @@ def main() -> None:
         )
 
     def wall(df, **kw) -> float:
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            cap_per_host(df, "url", "doc_id", cap=args.cap, **kw).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            e = time.perf_counter() - t0
-            best = e if best is None else min(best, e)
-            spark.catalog.clearCache()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-        return round(best, 2)
+        t = time_noop(
+            spark, lambda: cap_per_host(df, "url", "doc_id", cap=args.cap, **kw), 2
+        )
+        return round(t["min"], 2)
 
     out: dict[str, dict] = {"factor": FACTOR, "cap": args.cap}
     for scale in scales:
@@ -155,17 +146,12 @@ def main() -> None:
         }
         print(label, out[label], flush=True)
 
-    path = os.path.join(REPO, "SCALING.json")
-    with open(path) as fh:
-        scaling = json.load(fh)
-    entry = scaling["queries"].setdefault("web_cap_prefilter", {})
+    with open(SCALING_PATH) as fh:
+        entry = json.load(fh)["queries"].get("web_cap_prefilter", {})
     # merge per-scale so partial runs (e.g. --scales 100 alone) extend
     # the lane instead of clobbering the other volumes
-    merged = entry.get("zipf", {})
-    merged.update(out)
-    entry["zipf"] = merged
-    with open(path, "w") as fh:
-        json.dump(scaling, fh, indent=1, sort_keys=True)
+    write_scaling({"web_cap_prefilter": {**entry.get("zipf", {}), **out}},
+                  lane="zipf")
     print(json.dumps({"zipf": out}))
 
 

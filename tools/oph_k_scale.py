@@ -22,12 +22,13 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
+
+from tools.measure import time_noop, write_scaling  # noqa: E402
 
 
 def main() -> None:
@@ -46,36 +47,22 @@ def main() -> None:
     docs = spark.read.parquet(os.path.join(args.sf, "documents.parquet"))
     docs = docs.select("doc_id", "text")
 
-    def timed(make) -> float:
-        best = float("inf")
-        for _ in range(args.runs):
-            t0 = time.time()
-            make().write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
     # warm the JVM/codegen path once so neither variant pays first-run
     # compile inside its measurement
     docs.count()
 
     out = {}
     for k in (64, 256):
-        out[f"classic_k{k}"] = timed(
-            lambda: minhash_signatures(docs, "text", "doc_id", 3, k)
-        )
-        out[f"oph_k{k}"] = timed(
-            lambda: oph_minhash_signatures(docs, "text", "doc_id", 3, k)
-        )
+        for label, sign in (("classic", minhash_signatures),
+                            ("oph", oph_minhash_signatures)):
+            out[f"{label}_k{k}"] = time_noop(
+                spark, lambda: sign(docs, "text", "doc_id", 3, k), args.runs
+            )["min"]
     out["classic_k_ratio"] = round(out["classic_k256"] / out["classic_k64"], 2)
     out["oph_k_ratio"] = round(out["oph_k256"] / out["oph_k64"], 2)
     print(json.dumps(out))
 
-    path = os.path.join(REPO, "SCALING.json")
-    with open(path) as fh:
-        scaling = json.load(fh)
-    scaling["queries"].setdefault("dedup_minhash_oph", {})["k_scaling"] = out
-    with open(path, "w") as fh:
-        json.dump(scaling, fh, indent=1, sort_keys=True)
+    write_scaling({"dedup_minhash_oph": out}, lane="k_scaling")
 
 
 if __name__ == "__main__":

@@ -1,8 +1,9 @@
 """Focused per-query optimization bench (round 14): time a subset of
 registered queries at one scale dir with bench.py's exact methodology
-(noop sink, min-of-N, cache/GC hygiene between runs), report shuffle
-write + spill deltas for the first run, and optionally dump
-`.explain("formatted")` plans.
+(tools/measure.py: noop sink, min-of-N, cache/GC cleanup between runs),
+report shuffle write + spill deltas for the first run, and optionally
+dump `.explain("formatted")` plans of the DataFrame the first timed run
+built.
 
 Usage:
     python tools/qbench.py --sf /root/testdata/sf0.1 \
@@ -10,16 +11,6 @@ Usage:
 
 Prints one JSON line {name: {"min": s, "runs": [...], "shuffle_mb": m,
 "spill_disk_mb": m, "spill_mem_mb": m}}.
-
-Caveat (round-15, ADVICE r14): with ``--plans``, building the plan
-calls ``fn(spark, args.sf)`` once more before the timed loop. For
-side-effecting queries (the streaming harnesses stage files, RUN the
-stream to completion, and clean up inside ``fn``) that extra call fully
-executes the query — it roughly doubles wall time and warms state, so
-run-0's shuffle/spill deltas no longer describe a cold run (the byte
-snapshot is taken after the plan build, so the deltas are still
-run-0's own, just over warmed caches/page cache). Dump plans for
-streaming queries in a separate invocation from the one you time.
 """
 
 from __future__ import annotations
@@ -28,14 +19,13 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
 
-from tools.scale_bench import _bytes_snapshot  # noqa: E402
+from tools.measure import time_noop, warm  # noqa: E402
 
 
 def main() -> None:
@@ -52,24 +42,23 @@ def main() -> None:
     from olist_snowflake_dbt_spark.queries import QUERIES
 
     spark = get_spark("qbench")
-    spark.range(1).count()
-    from olist_snowflake_dbt_spark.sources.readers import (
-        TESTDATA_TABLES,
-        read_table,
-    )
-
-    for t in TESTDATA_TABLES:
-        try:
-            read_table(spark, args.sf, t).limit(1).count()
-        except Exception:
-            pass
+    warm(spark, args.sf)
 
     out: dict[str, dict] = {}
     for name in args.queries:
         fn = QUERIES[name]
+        built: list = []
+
+        def make():
+            built.append(fn(spark, args.sf))
+            return built[-1]
+
+        spark.sparkContext.setJobDescription(f"qbench:{name}")
+        out[name] = time_noop(spark, make, args.runs)
+        print(f"# {name}: {out[name]}", file=sys.stderr)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            df = fn(spark, args.sf)
+            df = built[0]
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
@@ -77,36 +66,6 @@ def main() -> None:
                 os.path.join(args.plans, f"{name}_{args.suffix}.txt"), "w"
             ) as fh:
                 fh.write(plan)
-        spark.sparkContext.setJobDescription(f"qbench:{name}")
-        best = None
-        runs: list[float] = []
-        metrics: dict[str, float] = {}
-        for r in range(args.runs):
-            if r == 0:
-                before = _bytes_snapshot(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - t0
-            if r == 0:
-                after = _bytes_snapshot(spark)
-                mb = 1024.0 * 1024.0
-                metrics = {
-                    "shuffle_mb": round((after[0] - before[0]) / mb, 2),
-                    "spill_disk_mb": round((after[1] - before[1]) / mb, 2),
-                    "spill_mem_mb": round((after[2] - before[2]) / mb, 2),
-                }
-            runs.append(round(elapsed, 3))
-            best = elapsed if best is None else min(best, elapsed)
-            spark.catalog.clearCache()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-        if best is not None:
-            out[name] = {"min": round(best, 3), "runs": runs, **metrics}
-        print(f"# {name}: min={best} runs={runs} {metrics}",
-              file=sys.stderr)
     print(json.dumps(out))
 
 

@@ -3,8 +3,9 @@ ratio of the most expensive operators and publish it, converting the
 100-TB design claims from plan-shape arguments into a measured curve.
 
 Runs each query min-of-N at BOTH scale factors inside one session
-(shared JVM/codegen warmup, per-query cache/GC hygiene identical to
-bench.py), then writes SCALING.json:
+(warm-up, timer and cache/GC cleanup shared with bench.py through
+tools/measure.py), then merges each query's row into SCALING.json,
+keeping its nested lanes and every query it did not run:
 
     {"data_ratio": 10, "queries": {name: {"sf0.1": s, "sf1": s,
      "ratio": r, "sf0.1_shuffle_mb": m, "sf1_shuffle_mb": m,
@@ -38,15 +39,17 @@ Usage: python tools/scale_bench.py [--runs 2] [--only q1,q2,...] [--core]
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
+
+from tools.measure import time_noop, warm, write_scaling  # noqa: E402
 
 # the ~16 most expensive / scale-critical operators (bench top-list +
 # the deliberate fact-fact shuffles): every dedup family member, ANN,
@@ -158,72 +161,10 @@ DECADE2_QUERIES = [
 ]
 
 
-def _bytes_snapshot(spark) -> tuple[int, int, int]:
-    """(shuffle_write, disk_spill, mem_spill) cumulative totals.
-
-    Shuffle write comes from the executor-level counters (monotonic for
-    the JVM's lifetime — per-query deltas survive stage-store eviction,
-    unlike summing the stage list). Spill only exists per-stage, so it
-    uses the stage store (best effort: a run long enough to evict its
-    own stages would undercount; lane queries are seconds, retention is
-    1000 stages)."""
-    store = spark._jsc.sc().statusStore()
-    sw = 0
-    ex = store.executorList(False)
-    for i in range(ex.size()):
-        sw += ex.apply(i).totalShuffleWrite()
-    disk = mem = 0
-    try:
-        jvm = spark.sparkContext._jvm
-        args = [jvm.java.util.ArrayList()] + [
-            getattr(store, f"stageList$default${j}")() for j in range(2, 6)
-        ]
-        st = store.stageList(*args)
-        for i in range(st.size()):
-            s = st.apply(i)
-            disk += s.diskBytesSpilled()
-            mem += s.memoryBytesSpilled()
-    except Exception:
-        pass
-    return sw, disk, mem
-
-
-def _time_query(spark, fn, sf_dir: str, runs: int) -> tuple[float, dict]:
-    best = None
-    metrics: dict[str, float] = {}
-    for r in range(runs):
-        if r == 0:
-            before = _bytes_snapshot(spark)
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        if r == 0:
-            after = _bytes_snapshot(spark)
-            mb = 1024.0 * 1024.0
-            metrics = {
-                "shuffle_mb": round((after[0] - before[0]) / mb, 2),
-                "spill_disk_mb": round((after[1] - before[1]) / mb, 2),
-                "spill_mem_mb": round((after[2] - before[2]) / mb, 2),
-            }
-        best = elapsed if best is None else min(best, elapsed)
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-    return best, metrics
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--only", default="")
-    ap.add_argument(
-        "--merge",
-        action="store_true",
-        help="update existing SCALING.json entries instead of replacing the file",
-    )
     ap.add_argument(
         "--core",
         action="store_true",
@@ -241,8 +182,8 @@ def main() -> None:
         help="round-13 pin for the >10x d2 byte-ratio adjudications: "
         "disable broadcast joins (static + AQE thresholds = -1) so BOTH "
         "decades run sort-merge, and record the clean bytes_ratio_d2 "
-        "under a nested 'forced_smj' key (merge-only; never clobbers "
-        "the default-plan numbers)",
+        "under a nested 'forced_smj' key (never clobbers the "
+        "default-plan numbers)",
     )
     args = ap.parse_args()
     from olist_snowflake_dbt_spark.queries import QUERIES as _ALL
@@ -269,7 +210,6 @@ def main() -> None:
 
     from olist_snowflake_dbt_spark.queries import QUERIES
     from olist_snowflake_dbt_spark.session import get_spark
-    from olist_snowflake_dbt_spark.sources.readers import TESTDATA_TABLES, read_table
 
     spark = get_spark("scale_bench")
     if args.forced_smj:
@@ -277,13 +217,7 @@ def main() -> None:
         # re-plan threshold — either alone still lets a broadcast in
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.range(1).count()
-    for sf_dir in sf_dirs.values():
-        for t in TESTDATA_TABLES:
-            try:
-                read_table(spark, sf_dir, t).limit(1).count()
-            except Exception:
-                pass
+    warm(spark, *sf_dirs.values())
 
     out: dict[str, dict] = {}
     for name in names:
@@ -291,12 +225,12 @@ def main() -> None:
         row: dict[str, float] = {}
         for sf, sf_dir in sf_dirs.items():
             try:
-                best, metrics = _time_query(spark, fn, sf_dir, args.runs)
-                row[sf] = round(best, 3)
-                row[f"{sf}_shuffle_mb"] = metrics.get("shuffle_mb", 0.0)
+                t = time_noop(spark, functools.partial(fn, spark, sf_dir), args.runs)
+                row[sf] = t["min"]
+                row[f"{sf}_shuffle_mb"] = t["shuffle_mb"]
                 for k in ("spill_disk_mb", "spill_mem_mb"):
-                    if metrics.get(k):  # spill is rare — record only hits
-                        row[f"{sf}_{k}"] = metrics[k]
+                    if t[k]:  # spill is rare — record only hits
+                        row[f"{sf}_{k}"] = t[k]
             except Exception as exc:
                 row[f"{sf}_error"] = f"{type(exc).__name__}: {exc}"[:200]
                 print(f"{name} @ {sf} FAILED: {row[f'{sf}_error']}", file=sys.stderr)
@@ -320,44 +254,24 @@ def main() -> None:
         out[name] = row
         print(name, row, flush=True)
 
-    scaling_path = os.path.join(REPO, "SCALING.json")
     if args.forced_smj:
-        # nest under forced_smj so the default-plan lane stays intact
-        if not os.path.exists(scaling_path):
-            sys.exit("--forced-smj requires an existing SCALING.json")
-        with open(scaling_path) as fh:
-            prior = json.load(fh).get("queries", {})
-        for name, row in out.items():
-            prior.setdefault(name, {})["forced_smj"] = row
-        out = prior
-    elif args.merge and os.path.exists(scaling_path):
-        with open(scaling_path) as fh:
-            prior = json.load(fh).get("queries", {})
-        # per-query merge that PRESERVES nested lanes (forced_smj,
-        # standing_growth, zipf, ...) — a flat update() would clobber
-        # them with the fresh flat row
-        for name, row in out.items():
-            base = prior.get(name, {})
-            nested = {k: v for k, v in base.items() if isinstance(v, dict)}
-            prior[name] = {**row, **nested}
-        out = prior
-    result = {
-        "data_ratio": 10,
-        "runs_per_point": args.runs,
-        "queries": out,
-        "note": (
-            "min-of-N wall seconds per scale factor in one shared session; "
-            "fixed per-query overhead (plan, Python worker, checkpoint "
-            "setup) does not scale with data, so linear operators show "
-            "ratio << 10. *_shuffle_mb = shuffle-write bytes moved by the "
-            "first run (executor-counter delta); bytes_ratio ~10 = linear "
-            "exchange, <<10 = sub-linear payload (sketch/cap/broadcast), "
-            ">10 = super-linear movement. Adjudication of outliers: "
-            "SCALE.md §measured."
-        ),
-    }
-    with open(os.path.join(REPO, "SCALING.json"), "w") as fh:
-        json.dump(result, fh, indent=1, sort_keys=True)
+        # nested under forced_smj so the default-plan lane stays intact
+        write_scaling(out, lane="forced_smj")
+    else:
+        write_scaling(out, top={
+            "data_ratio": 10,
+            "runs_per_point": args.runs,
+            "note": (
+                "min-of-N wall seconds per scale factor in one shared session; "
+                "fixed per-query overhead (plan, Python worker, checkpoint "
+                "setup) does not scale with data, so linear operators show "
+                "ratio << 10. *_shuffle_mb = shuffle-write bytes moved by the "
+                "first run (executor-counter delta); bytes_ratio ~10 = linear "
+                "exchange, <<10 = sub-linear payload (sketch/cap/broadcast), "
+                ">10 = super-linear movement. Adjudication of outliers: "
+                "SCALE.md §measured."
+            ),
+        })
     print(json.dumps({k: v.get("ratio") for k, v in out.items()}))
 
 

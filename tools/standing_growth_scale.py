@@ -52,6 +52,8 @@ sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
 
+from tools.measure import time_noop, warm, write_scaling  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
 PLANT_MOD = 50  # every 50th batch key is planted into standing (2%)
 
@@ -77,7 +79,7 @@ def main() -> None:
     from olist_snowflake_dbt_spark.session import get_spark
 
     spark = get_spark("standing_growth")
-    spark.range(1).count()
+    warm(spark)
 
     batch = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -115,20 +117,6 @@ def main() -> None:
             F.md5(F.concat(F.lit(tag), F.col("id").cast("string"))).alias(col)
         )
 
-    def wall_of(make_df) -> float:
-        best = None
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            make_df().write.format("noop").mode("overwrite").save()
-            e = time.perf_counter() - t0
-            best = e if best is None else min(best, e)
-            spark.catalog.clearCache()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-        return round(best, 2)
-
     lanes = {
         "dedup_incremental_minhash": {
             "base_rows": n_bands,
@@ -160,11 +148,11 @@ def main() -> None:
             standing_rows = standing.count()
             admitted = lane["run"](standing).count()
             admitted_counts.append(admitted)
-            w = wall_of(lambda: lane["run"](standing))
+            wall = time_noop(spark, lambda: lane["run"](standing), args.runs)["min"]
             out[f"x{scale}"] = {
                 "standing_rows": standing_rows,
                 "admitted": admitted,
-                "wall": w,
+                "wall": round(wall, 2),
             }
             print(name, f"x{scale}", out[f"x{scale}"], flush=True)
         if len(set(admitted_counts)) != 1:
@@ -175,13 +163,7 @@ def main() -> None:
             )
         results[name] = out
 
-    path = os.path.join(REPO, "SCALING.json")
-    with open(path) as fh:
-        scaling = json.load(fh)
-    for name, out in results.items():
-        scaling["queries"].setdefault(name, {})["standing_growth"] = out
-    with open(path, "w") as fh:
-        json.dump(scaling, fh, indent=1, sort_keys=True)
+    write_scaling(results, lane="standing_growth")
     print(json.dumps({"standing_growth": results}))
 
 
@@ -198,7 +180,7 @@ def stream_lane(scales: list[int], runs: int) -> None:
 
     n_buckets = 16
     spark = get_spark("standing_growth_stream")
-    spark.range(1).count()
+    warm(spark)
     root = tempfile.mkdtemp(prefix="spark_graft_adm_lane_")
 
     batch = (
@@ -284,14 +266,7 @@ def stream_lane(scales: list[int], runs: int) -> None:
             f"scales ({admitted_counts}) — the planted slice must be the "
             "only rejection source at every scale"
         )
-    path = os.path.join(REPO, "SCALING.json")
-    with open(path) as fh:
-        scaling = json.load(fh)
-    scaling["queries"].setdefault("stream_dedup_admission", {})[
-        "standing_growth"
-    ] = out
-    with open(path, "w") as fh:
-        json.dump(scaling, fh, indent=1, sort_keys=True)
+    write_scaling({"stream_dedup_admission": out}, lane="standing_growth")
     print(json.dumps({"standing_growth": {"stream_dedup_admission": out}}))
 
 

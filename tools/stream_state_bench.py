@@ -26,15 +26,18 @@ Usage: python tools/stream_state_bench.py [--only q1,q2,...]
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
+
+from perfbench.measure import progress_listener  # noqa: E402
+from tools.measure import time_noop, write_scaling  # noqa: E402
 
 # the streaming-family driver queries (the full family: stateful ones
 # prove boundedness, stateless ones prove ZERO state)
@@ -68,28 +71,12 @@ def main() -> None:
     if not os.path.isdir(SF_DIRS["sf1"]):
         sys.exit("sf1 missing — run: python tools/gen_scale.py")
 
-    from pyspark.sql.streaming import StreamingQueryListener
-
     from olist_snowflake_dbt_spark.queries import QUERIES
     from olist_snowflake_dbt_spark.session import get_spark
 
     captured: list[str] = []
-
-    class _Capture(StreamingQueryListener):
-        def onQueryStarted(self, event) -> None:
-            pass
-
-        def onQueryProgress(self, event) -> None:
-            captured.append(event.progress.json)
-
-        def onQueryIdle(self, event) -> None:
-            pass
-
-        def onQueryTerminated(self, event) -> None:
-            pass
-
     spark = get_spark("stream_state_bench")
-    spark.streams.addListener(_Capture())
+    spark.streams.addListener(progress_listener(captured))
 
     out: dict[str, dict] = {}
     for name in names:
@@ -104,20 +91,15 @@ def main() -> None:
         }
         for sf, sf_dir in SF_DIRS.items():
             captured.clear()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
+            try:  # one noop run with the shared cleanup; state, not time
+                time_noop(spark, functools.partial(fn, spark, sf_dir), 1)
             except Exception as exc:
                 row[f"{sf}_error"] = f"{type(exc).__name__}: {exc}"[:200]
                 print(f"{name} @ {sf} FAILED: {row[f'{sf}_error']}",
                       file=sys.stderr)
                 continue
-            # progress events are delivered async — drain briefly
-            deadline = time.time() + 5
-            seen = -1
-            while time.time() < deadline and len(captured) != seen:
-                seen = len(captured)
-                time.sleep(0.4)
+            # progress events reach the listener asynchronously
+            spark._jsc.sc().listenerBus().waitUntilEmpty()
             rows_max = mem_max = input_rows = 0
             rows_last = 0
             n_ops = 0
@@ -142,28 +124,20 @@ def main() -> None:
             row["input_rows"][sf] = input_rows
             row["n_batches"][sf] = len(captured)
             row["n_state_operators"] = max(row["n_state_operators"], n_ops)
-            spark.catalog.clearCache()
         a, b = row["state_rows_max"].get("sf0.1"), row["state_rows_max"].get("sf1")
         if a and b:
             row["state_rows_ratio"] = round(b / a, 2)
         out[name] = row
         print(name, json.dumps(row), flush=True)
 
-    scaling_path = os.path.join(REPO, "SCALING.json")
-    with open(scaling_path) as fh:
-        doc = json.load(fh)
-    for name, row in out.items():
-        doc["queries"].setdefault(name, {})["state"] = row
-    doc["state_note"] = (
+    write_scaling(out, lane="state", top={"state_note": (
         "state = StreamingQueryProgress.stateOperators per micro-batch at "
         "two input volumes (10x rows AND 10x keys). state_rows_max scales "
         "with the watermark-horizon key/window population (ratio ~10 on "
         "the key-replicated fixture), NOT with input processed; "
         "state_rows_max << input_rows and zero state for the stateless "
         "rows. Adjudication: SCALE.md §streaming-state."
-    )
-    with open(scaling_path, "w") as fh:
-        json.dump(doc, fh, indent=1, sort_keys=True)
+    )})
     print(json.dumps({k: v.get("state_rows_ratio") for k, v in out.items()}))
 
 
