@@ -93,15 +93,3 @@ def fingerprint(text: Column | str) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text."""
     return F.md5(normalize(text))
 
-
-def rolling_hashes(text: Column | str, n: int = 8) -> Column:
-    """Karp-Rabin-style rolling fingerprints: xxhash64 of each n-char
-    window of the normalized text (winnowing's ingredient); distinct."""
-    c = normalize(text)
-    ln = F.length(c)
-    idx = F.sequence(F.lit(1), F.greatest(ln - n + 1, F.lit(1)))
-    return F.array_distinct(
-        F.when(ln <= 0, F.array()).otherwise(
-            F.transform(idx, lambda i: F.xxhash64(c.substr(i, F.lit(n))))
-        )
-    )

@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.materialize import _atomic_swap, _stage
+
 
 def incremental_append(existing: DataFrame, batch: DataFrame) -> DataFrame:
     """``append``: keep everything, add the batch (strategies.sql:16)."""
@@ -236,31 +238,10 @@ class IncrementalTable:
         raise ValueError(f"unknown on_schema_change: {on_schema_change!r}")
 
     def _write_full(self, df: DataFrame) -> None:
-        import os
-        import shutil
-        import uuid
-
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(tmp)
-        # backup-swap, never delete-then-rename: the old generation must
-        # stay restorable until the new one is fully in place — a crash
-        # between an rmtree and the rename would lose the table outright.
-        # (Renames are metadata ops; the lazy `df` reading the standing
-        # files is safe because the write above already materialized it.)
-        backup = f"{self.path}.backup-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, backup)
-        try:
-            os.rename(tmp, self.path)
-        except OSError:
-            if os.path.exists(backup):
-                os.rename(backup, self.path)
-            raise
-        if os.path.exists(backup):
-            shutil.rmtree(backup, ignore_errors=True)
+        # stage, then backup-swap: the old generation stays restorable
+        # until the new one is fully in place. (The lazy `df` reading
+        # the standing files is safe: staging materialized it first.)
+        _atomic_swap(self.path, _stage(df, self.path, self.partition_by))
 
     def apply(
         self,

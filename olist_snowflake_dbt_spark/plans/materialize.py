@@ -9,9 +9,10 @@ Reference semantics (SURVEY.md §2 A17-A19):
   inlining).
 - ``table``  — ``CREATE OR REPLACE TABLE … AS`` with intermediate/backup
   rename-swap for atomicity (dbt macros/materializations/models/
-  table.sql:17-50). Spark: write Parquet to ``<name>.tmp-<token>``, then
-  atomically rename over the live directory, then re-register the view over
-  the written files. Readers either see the old or the new table.
+  table.sql:17-50). Spark: :func:`_stage` writes Parquet to a hidden
+  ``.<name>.tmp-<token>`` sibling, :func:`_atomic_swap` renames it over the
+  live directory, then the view is re-registered over the written files.
+  Readers either see the old or the new table.
 - ``ephemeral`` — never registered; inlined into consumers (dbt CTE
   inlining). Spark: identical to an unregistered DataFrame.
 - ``incremental`` — see operators/incremental.py (dbt-snowflake
@@ -30,7 +31,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Literal
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -60,30 +61,51 @@ def materialize_table(
     df: DataFrame,
     warehouse_dir: str,
     partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> MaterializedRelation:
-    """CTAS with atomic publish: write tmp dir → swap → register view.
+    """CTAS with atomic publish: stage → swap → register view.
 
     Mirrors dbt's create-intermediate → rename-swap → drop-backup dance
     (macros/materializations/models/table.sql:17-50) on a filesystem.
     """
     final = os.path.join(warehouse_dir, name)
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    _atomic_swap(final, tmp)
+    _atomic_swap(final, _stage(df, final, partition_by))
     out = spark.read.parquet(final)
     out.createOrReplaceTempView(name)
     return MaterializedRelation(name, "table", final, out)
 
 
+def _sibling(final: str, infix: str) -> str:
+    """A fresh dot-prefixed sibling of ``final``. Spark's file listing
+    skips dot-prefixed entries, so a crash leftover never reads as data
+    — nor as a bogus partition value when ``final`` is a ``key=value``
+    directory inside a live table."""
+    head, tail = os.path.split(os.path.normpath(final))
+    return os.path.join(head, f".{tail}{infix}{uuid.uuid4().hex[:8]}")
+
+
+def _stage(df: DataFrame, final: str, partition_by: tuple[str, ...] = ()) -> str:
+    """Write ``df`` as Parquet to a staging sibling of ``final`` and
+    return its path, for :func:`_atomic_swap`. A failed write removes
+    the staging directory and leaves ``final`` untouched."""
+    tmp = _sibling(final, ".tmp-")
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    try:
+        writer.parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return tmp
+
+
 def _atomic_swap(final: str, tmp: str) -> None:
-    """Publish ``tmp`` over ``final`` with restore-on-failure (the
-    rename-swap from :func:`materialize_table`, shared by maintenance
-    ops)."""
-    backup = f"{final}.backup-{uuid.uuid4().hex[:8]}"
+    """Publish ``tmp`` over ``final``: move the old generation to a
+    backup sibling, rename ``tmp`` into place (restoring the backup if
+    that rename fails), then drop the backup. Every Parquet table
+    rewrite in the package goes through here: whole tables, seeds,
+    incremental rewrites and single partitions of streaming state."""
+    backup = _sibling(final, ".backup-")
     if os.path.exists(final):
         os.rename(final, backup)
     try:
@@ -122,9 +144,7 @@ def compact_table(
     cluster the same two lines go through the Hadoop FileSystem API.
     The swap keeps readers on the old files until the rename."""
     n = max(1, -(-_dir_bytes(path) // target_file_bytes))
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(tmp)
-    _atomic_swap(path, tmp)
+    _atomic_swap(path, _stage(spark.read.parquet(path).repartition(n), path))
     return sum(
         1 for f in os.listdir(path) if f.endswith(".parquet")
     )
@@ -146,31 +166,26 @@ def materialize_clustered_table(
     Z-order, and the right layout for a 100 TB table whose dominant
     predicate is a range on one key (time, id). Disjointness is
     asserted from the written footers in tests/test_formats.py."""
-    final = os.path.join(warehouse_dir, name)
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-    (
+    clustered = (
         df.repartitionByRange(num_files, *cluster_by)
         .sortWithinPartitions(*cluster_by)
-        .write.mode("overwrite")
-        .parquet(tmp)
     )
-    _atomic_swap(final, tmp)
-    out = spark.read.parquet(final)
-    out.createOrReplaceTempView(name)
-    return MaterializedRelation(name, "clustered_table", final, out)
+    rel = materialize_table(spark, name, clustered, warehouse_dir)
+    return replace(rel, materialization="clustered_table")
 
 
 def clone_table(src: str, dst: str) -> int:
     """B4: zero-copy clone (dbt ``clone.sql`` / Snowflake ``CREATE TABLE
     … CLONE``) at parquet-file granularity: every data file of ``src``
     is HARDLINKED into ``dst`` — no bytes copied, metadata-only, exactly
-    Snowflake's pointer semantics. Safe because every writer in this
-    repo publishes immutable files via write-to-tmp + atomic rename
-    (:func:`_atomic_swap`, ``IncrementalTable._write_full``): a later
-    overwrite of either table swaps in NEW files and never mutates a
-    linked one, so clones diverge copy-on-write like Snowflake's. Falls
-    back to a real copy across filesystems (EXDEV). Returns the file
-    count; raises if ``dst`` exists (clone is create, not overwrite)."""
+    Snowflake's pointer semantics. Safe because every table writer in
+    this repo publishes immutable files through :func:`_stage` +
+    :func:`_atomic_swap` (write a staging sibling, rename it in): a
+    later overwrite of either table swaps in NEW files and never
+    mutates a linked one, so clones diverge copy-on-write like
+    Snowflake's. Falls back to a real copy across filesystems (EXDEV).
+    Returns the file count; raises if ``dst`` exists (clone is create,
+    not overwrite)."""
     if os.path.exists(dst):
         raise FileExistsError(f"clone target already exists: {dst}")
     # crash safety: link into a staging sibling, publish with ONE atomic
@@ -320,20 +335,14 @@ def materialize_zorder_table(
     table queried by more than one key (e.g. time AND tenant).
     Per-dimension file-skipping is asserted from written footers in
     tests/test_formats.py."""
-    final = os.path.join(warehouse_dir, name)
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
     zdf = df.withColumn("__z", zorder_value(df, zorder_by, bits_per_dim))
-    (
+    zordered = (
         zdf.repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z", *zorder_by)
         .drop("__z")
-        .write.mode("overwrite")
-        .parquet(tmp)
     )
-    _atomic_swap(final, tmp)
-    out = spark.read.parquet(final)
-    out.createOrReplaceTempView(name)
-    return MaterializedRelation(name, "zorder_table", final, out)
+    rel = materialize_table(spark, name, zordered, warehouse_dir)
+    return replace(rel, materialization="zorder_table")
 
 
 def materialize_bucketed_table(
@@ -410,9 +419,7 @@ def multi_table_insert(
             if not os.path.isdir(src):
                 os.makedirs(src, exist_ok=True)  # route matched 0 rows:
                 # publish an empty (schema-less) dir; readers get 0 rows
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            os.rename(src, tmp)
-            _atomic_swap(final, tmp)
+            _atomic_swap(final, src)
             rel_df = spark.read.schema(
                 staged.drop(route_col).schema
             ).parquet(final)

@@ -41,13 +41,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; returns the DataFrames."""
-    out = {}
-    for name in TESTDATA_TABLES:
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

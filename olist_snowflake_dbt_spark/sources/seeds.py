@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.materialize import materialize_table
+
 # Candidate regexes, tested in dbt-agate precedence order on non-null values.
 _INT_RE = r"^[-+]?\d{1,18}$"
 _NUM_RE = r"^[-+]?(\d+\.?\d*|\.\d+)([eE][-+]?\d+)?$"
@@ -166,15 +168,11 @@ def seed_to_parquet(
     schema: T.StructType | None = None,
     column_types: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Full seed materialization: CSV → typed table on Parquet.
+    """Full seed materialization: CSV → typed table on Parquet, published
+    by ``materialize_table``'s stage-and-swap like every table, so a
+    re-seed that fails mid-write keeps the previous seed readable.
 
     Re-run overwrites (the reference's TRUNCATE+INSERT and --full-refresh
-    paths both collapse to mode=overwrite — seeds/seed.sql:23-30)."""
-    import os
-
+    paths both collapse to one overwrite — seeds/seed.sql:23-30)."""
     df = read_seed_csv(spark, csv_path, schema, column_types=column_types)
-    path = os.path.join(out_dir, name)
-    df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    out.createOrReplaceTempView(name)
-    return out
+    return materialize_table(spark, name, df, out_dir).df

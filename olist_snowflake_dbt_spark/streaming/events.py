@@ -626,10 +626,9 @@ def cdc_apply_stream(
     DataStreamWriter (caller starts + awaits)."""
     import glob as _glob
     import shutil as _shutil
-    import uuid as _uuid
 
     from ..operators.incremental import cdc_latest
-    from ..plans.materialize import _atomic_swap
+    from ..plans.materialize import _atomic_swap, _stage
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -651,9 +650,7 @@ def cdc_apply_stream(
                     )
                 else:
                     merged = collapsed
-                tmp = f"{state_path}.tmp-{_uuid.uuid4().hex[:8]}"
-                merged.write.mode("overwrite").parquet(tmp)
-                _atomic_swap(state_path, tmp)
+                _atomic_swap(state_path, _stage(merged, state_path))
                 return
             # persist the collapsed batch: the touched-bucket collect
             # and the merge write are separate ACTIONS — unpersisted,
@@ -686,31 +683,15 @@ def cdc_apply_stream(
                 )
             else:
                 merged = collapsed
-            tag = _uuid.uuid4().hex[:8]
-            stage = os.path.join(state_path, f".cdcmerge-{tag}")
-            (
-                merged.repartition("key_bucket")
-                .write.mode("overwrite")
-                .partitionBy("key_bucket")
-                .parquet(stage)
+            stage = _stage(
+                merged.repartition("key_bucket"), state_path, ("key_bucket",)
             )
             os.makedirs(state_path, exist_ok=True)
             for b in touched:
                 src = os.path.join(stage, f"key_bucket={b}")
                 dst = os.path.join(state_path, f"key_bucket={b}")
-                if not os.path.exists(src):
-                    continue  # bucket merged to zero rows (cannot happen
-                    # with tombstone retention, but stay defensive)
-                backup = os.path.join(state_path, f".backup-{b}-{tag}")
-                if os.path.exists(dst):
-                    os.rename(dst, backup)
-                try:
-                    os.rename(src, dst)
-                except OSError:
-                    if os.path.exists(backup):
-                        os.rename(backup, dst)
-                    raise
-                _shutil.rmtree(backup, ignore_errors=True)
+                if os.path.exists(src):  # always: tombstones are kept, so
+                    _atomic_swap(dst, src)  # no bucket merges to 0 rows
             _shutil.rmtree(stage, ignore_errors=True)
         finally:
             try:
@@ -792,10 +773,9 @@ def dedup_admission_stream(
     a compaction task. Returns the DataStreamWriter (caller starts +
     awaits)."""
     import glob as _glob
-    import shutil as _shutil
-    import uuid as _uuid
 
     from ..functions.text import fingerprint
+    from ..plans.materialize import _atomic_swap, _stage
 
     def _admit(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -862,25 +842,13 @@ def dedup_admission_stream(
             for b in touched:
                 bdir = os.path.join(state_path, f"fp_bucket={b}")
                 files = _glob.glob(os.path.join(bdir, "part-*.parquet"))
-                if len(files) <= compact_files_per_bucket:
-                    continue
-                # dot-prefixed tmp/backup dirs are invisible to Spark's
-                # file listing, so a crash at ANY point leaves the
-                # partitioned tree readable (an unprefixed leftover
-                # would poison partition-column inference)
-                tag = f"{b}-{_uuid.uuid4().hex[:8]}"
-                tmp = os.path.join(state_path, f".compact-{tag}")
-                spark.read.parquet(bdir).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-                backup = os.path.join(state_path, f".backup-{tag}")
-                os.rename(bdir, backup)
-                try:
-                    os.rename(tmp, bdir)
-                except OSError:
-                    os.rename(backup, bdir)
-                    raise
-                _shutil.rmtree(backup, ignore_errors=True)
+                if len(files) > compact_files_per_bucket:
+                    # the staging and backup siblings are dot-prefixed,
+                    # so a crash at ANY point leaves the partitioned
+                    # tree readable
+                    _atomic_swap(
+                        bdir, _stage(spark.read.parquet(bdir).coalesce(1), bdir)
+                    )
         finally:
             try:
                 batch_fp.unpersist()  # scoped to this micro-batch

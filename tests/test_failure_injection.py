@@ -241,6 +241,30 @@ def test_dynamic_table_failed_refresh_keeps_table_then_retry_converges(
     }
 
 
+def test_partition_swap_leftover_backup_is_invisible(spark, tmp_path, monkeypatch):
+    """``_atomic_swap`` of one ``key=value`` directory inside a live
+    partitioned table: a backup that survives a crash (here: its removal
+    is skipped) must not show up as an extra partition value."""
+    import shutil
+
+    from olist_snowflake_dbt_spark.plans.materialize import _atomic_swap
+
+    root = str(tmp_path / "tbl")
+    spark.range(0, 6).select(
+        F.col("id"), (F.col("id") % 2).alias("k")
+    ).write.partitionBy("k").parquet(root)
+    new_k1 = str(tmp_path / "new_k1")
+    spark.range(100, 103).write.parquet(new_k1)
+
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **kw: None)
+    _atomic_swap(os.path.join(root, "k=1"), new_k1)
+    monkeypatch.undo()
+    assert [d for d in os.listdir(root) if ".backup-" in d]  # it survived
+
+    rows = {(r.id, r.k) for r in spark.read.parquet(root).collect()}
+    assert rows == {(0, 0), (2, 0), (4, 0), (100, 1), (101, 1), (102, 1)}
+
+
 class TestMultiTableInsertPromotion:
     """multi_table_insert's per-target promote loop (plans/materialize
     .multi_table_insert): a crash between target promotions must leave

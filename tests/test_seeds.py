@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.types as T
 
 from olist_snowflake_dbt_spark.sources.seeds import (
@@ -113,3 +115,28 @@ def test_column_types_override_preserves_leading_zeros(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="not in the seed"):
         read_seed_csv(spark, str(p), column_types={"nope": "string"})
+
+
+def test_failed_reseed_keeps_previous_seed(spark, tmp_path):
+    """A re-seed whose write job fails must leave the previous seed
+    table fully readable: seeds publish by stage-and-swap, never by
+    overwriting the live directory in place."""
+    import pytest as _pytest
+
+    wh = str(tmp_path / "wh")
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    good = _write(tmp_path, "id\n1\n2\n", "good.csv")
+    seed_to_parquet(spark, good, wh, "reseed", schema)
+
+    bad = _write(tmp_path, "id\n3\nnot-a-number\n", "bad.csv")
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with _pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            seed_to_parquet(spark, bad, wh, "reseed", schema)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+
+    back = spark.read.parquet(f"{wh}/reseed")
+    assert sorted(r.id for r in back.collect()) == [1, 2]
+    assert os.listdir(wh) == ["reseed"]  # the failed stage was removed
