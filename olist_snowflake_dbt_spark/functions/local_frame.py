@@ -26,7 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 def arrow_local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` through the Arrow path.
 
-    ``rows`` is a driver-local list of tuples/Rows; ``schema`` a DDL
+    ``rows`` is a driver-local iterable of tuples/Rows; it is read into
+    a list once, since each column takes its own pass over it (a
+    generator would be spent after the first). ``schema`` is a DDL
     string or StructType. Values are carried in object-dtype pandas
     columns, so ints stay exact (no float64 round trip) and None stays
     NULL; naive datetimes are localized to the session timezone (this
@@ -34,6 +36,7 @@ def arrow_local_df(spark: SparkSession, rows, schema) -> DataFrame:
     Falls back to the classic ``createDataFrame`` on any conversion
     error rather than failing the query.
     """
+    rows = list(rows)
     if not rows:
         return spark.createDataFrame([], schema)
     try:

@@ -66,10 +66,16 @@ def materialize_table(
 
     Mirrors dbt's create-intermediate → rename-swap → drop-backup dance
     (macros/materializations/models/table.sql:17-50) on a filesystem.
+
+    An unpartitioned table is read back under ``df``'s own schema, which
+    Spark's file source makes nullable exactly as its Parquet writer did
+    for the footer, so no footer-inference job runs. A partitioned one
+    keeps footer inference: its partition columns move to the end and
+    take their types from the directory names.
     """
     final = os.path.join(warehouse_dir, name)
     _atomic_swap(final, _stage(df, final, partition_by))
-    out = spark.read.parquet(final)
+    out = (spark.read if partition_by else spark.read.schema(df.schema)).parquet(final)
     out.createOrReplaceTempView(name)
     return MaterializedRelation(name, "table", final, out)
 

@@ -22,13 +22,12 @@ from .operators import dedup as DD
 from .operators import similarity as SIM
 from .operators import text as TX
 from .queries import _t, query
+from .sql_fragments import _DOT_DEC, _NORM, _WORDS
 
 # ---------------------------------------------------------------------
 # shared SQL fragments
 # ---------------------------------------------------------------------
 
-_NORM = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-_WORDS = f"string_split_regex({_NORM}, ' ')"
 _PLANTED_DOCS = """
     SELECT doc_id, text FROM documents
     UNION ALL
@@ -40,10 +39,6 @@ _PLANTED_EMB = """
     SELECT vec_id + 1000000 AS vec_id, embedding, label
     FROM embeddings WHERE vec_id % 100 = 0
 """
-_DOT_DEC = (
-    "(SELECT SUM(CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(28,15)))"
-    " FROM (SELECT UNNEST(a.embedding) AS x, UNNEST(b.embedding) AS y))"
-)
 
 
 def _planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,7 +14,7 @@ from .functions.local_frame import arrow_local_df
 from .operators._cache import scoped_persist
 from .operators.retrieval import bm25_topk, rrf_fuse
 from .queries import _t, query
-from .queries_ext import _DOT_DEC, _WORDS
+from .sql_fragments import _DOT_DEC, _WORDS
 
 _BM25_QUERIES = [
     (1, "spark join filter"),

@@ -12,6 +12,8 @@ expression on both sides, computed from exact inputs.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -380,9 +382,18 @@ def q_incremental_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
     return out.drop("__p").withColumn("value", F.col("value").cast("double"))
 
 
+# The repo-shipped fixture, found from this package's location so any
+# checkout reads its own copy.
+_SEED_FIXTURE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "fixtures",
+    "seed_customers.csv",
+)
+
+
 @query(
     "seed_csv_inference",
-    """
+    f"""
     SELECT customer_id,
            customer_zip_code_prefix,
            customer_city,
@@ -392,9 +403,9 @@ def q_incremental_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
            last_seen_ts,
            CAST(is_active AS VARCHAR) AS is_active,
            note
-    FROM read_csv('/root/repo/fixtures/seed_customers.csv', header=true,
+    FROM read_csv('{_SEED_FIXTURE}', header=true,
                   nullstr=['', 'null'],
-                  columns={'customer_id': 'VARCHAR',
+                  columns={{'customer_id': 'VARCHAR',
                            'customer_zip_code_prefix': 'BIGINT',
                            'customer_city': 'VARCHAR',
                            'customer_state': 'VARCHAR',
@@ -402,7 +413,7 @@ def q_incremental_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
                            'signup_date': 'DATE',
                            'last_seen_ts': 'TIMESTAMP',
                            'is_active': 'BOOLEAN',
-                           'note': 'VARCHAR'})
+                           'note': 'VARCHAR'}})
     """,
 )
 def q_seed_csv_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,7 +426,7 @@ def q_seed_csv_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seed itself stays DECIMAL-typed (tests/test_seeds.py)."""
     from .sources.seeds import read_seed_csv
 
-    seed = read_seed_csv(spark, "/root/repo/fixtures/seed_customers.csv")
+    seed = read_seed_csv(spark, _SEED_FIXTURE)
     return (
         seed.withColumn("amount", F.col("amount").cast("double"))
         # DATE → TIMESTAMP and BOOLEAN → STRING: pandas renders Spark

@@ -8,9 +8,10 @@ treating ``""`` and ``"null"`` as NULL
 typed DDL + batched INSERTs (dbt-snowflake macros/materializations/
 seed.sql:1-37). Spark-side we replicate the *inference precedence* exactly
 but ingest as one distributed job: read all-string CSV → one aggregation
-pass votes a type per column → cast → write Parquet. No row batching —
-the write is already partition-parallel, and at 100 TB a "seed" would just
-be a CSV directory read by the same code path.
+pass ANDs, per column, a bitmask of the candidate types each value
+satisfies → the first candidate still set wins → cast → write Parquet. No
+row batching — the write is already partition-parallel, and at 100 TB a
+"seed" would just be a CSV directory read by the same code path.
 
 Known fidelity quirk replicated on purpose: integer inference drops leading
 zeros (zip prefix "01037" → 1037) — SURVEY.md §1.3.
@@ -34,10 +35,14 @@ _ISODATETIME_RE = r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:
 _NULL_LITERALS = ("", "null")
 
 
+def _quote(name: str) -> str:
+    """``name`` as a backtick-quoted identifier: a dot in a CSV header is
+    part of the name, not struct-field access."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _col(name: str) -> Column:
-    """The column named ``name`` verbatim: a dot in a CSV header is part
-    of the name, not struct-field access."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(_quote(name))
 
 
 def _read_raw_strings(spark: SparkSession, path: str) -> DataFrame:
@@ -45,71 +50,59 @@ def _read_raw_strings(spark: SparkSession, path: str) -> DataFrame:
 
     Handles the reference seeds' quirks: UTF-8 BOM + CRLF
     (product_category_name_translation.csv), quoted commas (seller cities),
-    doubled-quote escapes, ``""``/``"null"`` → NULL (FIXTURES.md).
+    doubled-quote escapes, ``""``/``"null"`` → NULL (FIXTURES.md). One
+    projection strips a BOM/whitespace that survived into a header name
+    and maps the NULL literals.
     """
-    df = (
-        spark.read.options(
-            header=True,
-            quote='"',
-            escape='"',
-            encoding="UTF-8",
-            mode="PERMISSIVE",
-        ).csv(path)
+    df = spark.read.options(
+        header=True, quote='"', escape='"', encoding="UTF-8", mode="PERMISSIVE"
+    ).csv(path)
+    return df.select(*(
+        F.when(F.lower(_col(c)).isin(*_NULL_LITERALS), None)
+        .otherwise(_col(c))
+        .alias(c.lstrip("\ufeff").strip())
+        for c in df.columns
+    ))
+
+
+def _mask_sql(c: str) -> str:
+    """``bit_and`` of a per-value mask of the candidates it satisfies, one
+    bit each in precedence order: Integer 1, Number 2, Date 4, DateTime 8,
+    ISODateTime 16, Boolean 32. An Integer is also a Number and a DateTime
+    also an ISODateTime; no other pair overlaps, so the first CASE branch
+    that matches carries the value's whole set. NULLs are skipped, so an
+    all-NULL column reads NULL."""
+    q = _quote(c)
+    return (
+        f"bit_and(CASE WHEN {q} IS NULL THEN NULL"
+        f" WHEN {q} RLIKE r'{_INT_RE}' THEN 3 WHEN {q} RLIKE r'{_NUM_RE}' THEN 2"
+        f" WHEN {q} RLIKE r'{_DATE_RE}' THEN 4 WHEN {q} RLIKE r'{_DATETIME_RE}' THEN 24"
+        f" WHEN {q} RLIKE r'{_ISODATETIME_RE}' THEN 16"
+        f" WHEN lower({q}) IN ('true', 'false') THEN 32 ELSE 0 END)"
     )
-    # Strip a BOM that survived into the first header name.
-    renames = {c: c.lstrip("\ufeff").strip() for c in df.columns}
-    for old, new in renames.items():
-        if old != new:
-            df = df.withColumnRenamed(old, new)
-    for c in df.columns:
-        df = df.withColumn(
-            c, F.when(F.lower(_col(c)).isin(*_NULL_LITERALS), None).otherwise(_col(c))
-        )
-    return df
 
 
 def infer_seed_schema(raw: DataFrame) -> T.StructType:
-    """One distributed aggregation pass; per column picks the FIRST candidate
-    type every non-null value satisfies (agate_helper.py:59-76 precedence)."""
-    aggs = []
+    """One distributed aggregation from one SQL-text ``selectExpr``: per
+    column the :func:`_mask_sql` mask and the largest decimal scale seen.
+    Picks the FIRST candidate type every non-null value satisfies
+    (agate_helper.py:59-76 precedence): the mask's lowest set bit."""
+    exprs = []
     for c in raw.columns:
-        col = _col(c)
-        nn = col.isNotNull()
-        for key, rx in (
-            ("int", _INT_RE),
-            ("num", _NUM_RE),
-            ("date", _DATE_RE),
-            ("dt", _DATETIME_RE),
-            ("iso", _ISODATETIME_RE),
-        ):
-            ok = F.when(nn, col.rlike(rx)).otherwise(F.lit(True))
-            aggs.append(F.min(ok.cast("int")).alias(f"{c}\x1f{key}"))
-        bool_ok = F.when(nn, F.lower(col).isin("true", "false")).otherwise(F.lit(True))
-        aggs.append(F.min(bool_ok.cast("int")).alias(f"{c}\x1fbool"))
-        # max decimal scale actually observed, for the Number type
-        frac = F.regexp_extract(col, r"\.(\d+)", 1)
-        aggs.append(F.max(F.when(nn, F.length(frac)).otherwise(F.lit(0))).alias(f"{c}\x1fscale"))
-        aggs.append(F.max(nn.cast("int")).alias(f"{c}\x1fanyval"))
-    row = raw.agg(*aggs).collect()[0].asDict()
-
+        exprs.append(_mask_sql(c))
+        exprs.append(rf"max(length(regexp_extract({_quote(c)}, r'\.(\d+)', 1)))")
+    row = raw.selectExpr(*exprs).first()
     fields = []
-    for c in raw.columns:
-        v = {k.split("\x1f")[1]: row[k] for k in row if k.split("\x1f")[0] == c}
-        if not v["anyval"]:
-            dtype: T.DataType = T.StringType()  # all-NULL column → Text
-        elif v["int"]:
-            dtype = T.LongType()
-        elif v["num"]:
-            scale = min(int(v["scale"] or 0), 18)
-            dtype = T.DecimalType(38, scale)
-        elif v["date"]:
-            dtype = T.DateType()
-        elif v["dt"] or v["iso"]:
-            dtype = T.TimestampType()
-        elif v["bool"]:
-            dtype = T.BooleanType()
-        else:
-            dtype = T.StringType()
+    for i, c in enumerate(raw.columns):
+        mask, scale = row[2 * i] or 0, row[2 * i + 1]  # all-NULL → 0 → Text
+        dtype = {
+            1: T.LongType(),
+            2: T.DecimalType(38, min(int(scale or 0), 18)),
+            4: T.DateType(),
+            8: T.TimestampType(),
+            16: T.TimestampType(),
+            32: T.BooleanType(),
+        }.get(mask & -mask, T.StringType())
         fields.append(T.StructField(c, dtype, nullable=True))
     return T.StructType(fields)
 

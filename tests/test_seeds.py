@@ -140,3 +140,171 @@ def test_failed_reseed_keeps_previous_seed(spark, tmp_path):
     back = spark.read.parquet(f"{wh}/reseed")
     assert sorted(r.id for r in back.collect()) == [1, 2]
     assert os.listdir(wh) == ["reseed"]  # the failed stage was removed
+
+
+# ---------------------------------------------------------------------
+# Inference equivalence: the one-mask SQL-text aggregate against the
+# eight-aggregates-per-column form it replaced, kept here as the oracle.
+# ---------------------------------------------------------------------
+
+def _infer_eight_aggregates(raw):
+    """Per column, one ``min`` per candidate (1 if every non-null value
+    matches), the max decimal scale and an any-value flag; first
+    candidate in agate precedence wins."""
+    from pyspark.sql import functions as F
+
+    from olist_snowflake_dbt_spark.sources import seeds as S
+
+    aggs = []
+    for c in raw.columns:
+        col = S._col(c)
+        nn = col.isNotNull()
+        for key, rx in (("int", S._INT_RE), ("num", S._NUM_RE), ("date", S._DATE_RE),
+                        ("dt", S._DATETIME_RE), ("iso", S._ISODATETIME_RE)):
+            ok = F.when(nn, col.rlike(rx)).otherwise(F.lit(True))
+            aggs.append(F.min(ok.cast("int")).alias(f"{c}\x1f{key}"))
+        bool_ok = F.when(nn, F.lower(col).isin("true", "false")).otherwise(F.lit(True))
+        aggs.append(F.min(bool_ok.cast("int")).alias(f"{c}\x1fbool"))
+        frac = F.regexp_extract(col, r"\.(\d+)", 1)
+        aggs.append(F.max(F.when(nn, F.length(frac)).otherwise(F.lit(0))).alias(f"{c}\x1fscale"))
+        aggs.append(F.max(nn.cast("int")).alias(f"{c}\x1fanyval"))
+    row = raw.agg(*aggs).collect()[0]
+    fields = []
+    for i, c in enumerate(raw.columns):
+        v = dict(zip(("int", "num", "date", "dt", "iso", "bool", "scale", "anyval"),
+                     row[8 * i: 8 * i + 8]))
+        if not v["anyval"]:
+            dtype = T.StringType()
+        elif v["int"]:
+            dtype = T.LongType()
+        elif v["num"]:
+            dtype = T.DecimalType(38, min(int(v["scale"] or 0), 18))
+        elif v["date"]:
+            dtype = T.DateType()
+        elif v["dt"] or v["iso"]:
+            dtype = T.TimestampType()
+        elif v["bool"]:
+            dtype = T.BooleanType()
+        else:
+            dtype = T.StringType()
+        fields.append(T.StructField(c, dtype, True))
+    return T.StructType(fields)
+
+
+_ADVERSARIAL = {
+    "ints_and_dates": (["1", "2024-01-02", "7"], T.StringType()),
+    "datetime_and_iso_t": (["2024-01-02 10:00:00", "2024-01-02T10:00:00.5Z",
+                            "2024-01-02T10:00:00+03:00"], T.TimestampType()),
+    "sci_plus_leading_dot": (["1.0e-5", "+5", ".5"], T.DecimalType(38, 1)),
+    "nineteen_digits": (["1234567890123456789", "-1"], T.DecimalType(38, 0)),
+    "eighteen_digits": (["123456789012345678", "-1"], T.LongType()),
+    "mixed_case_bools": (["TRUE", "False", None], T.BooleanType()),
+    "bool_and_int": (["true", "1"], T.StringType()),
+    # Java's ``$`` also matches before a final line terminator
+    "trailing_newline": (["5\n", "6"], T.LongType()),
+    "all_null": ([None, None, None], T.StringType()),
+    "order.id": (["1", None, "3"], T.LongType()),
+    "note`x": (["2024-01-02", "2024-02-03", None], T.DateType()),
+    "it's \"q\"": (["1.25", "2.5", "3"], T.DecimalType(38, 2)),
+    "datetime_only": (["2024-01-02 10:00:00", None, "2024-01-03 00:00:00"], T.TimestampType()),
+    "fraction_long": (["0." + "1" * 25], T.DecimalType(38, 18)),
+    "blank_text": (["a b", "", "x"], T.StringType()),
+}
+
+
+def _adversarial_raw(spark):
+    names = list(_ADVERSARIAL)
+    n = max(len(vals) for vals, _ in _ADVERSARIAL.values())
+    rows = [tuple((_ADVERSARIAL[c][0] + [None] * n)[i] for c in names) for i in range(n)]
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in names])
+    return spark.createDataFrame(rows, schema)
+
+
+def test_mask_inference_matches_eight_aggregate_form_on_adversarial_columns(spark):
+    raw = _adversarial_raw(spark)
+    got = infer_seed_schema(raw)
+    assert got == _infer_eight_aggregates(raw)
+    for f in got.fields:
+        assert f.dataType == _ADVERSARIAL[f.name][1], f.name
+
+
+def test_mask_inference_matches_eight_aggregate_form_on_random_columns(spark):
+    """Columns drawn from a pool of near-miss tokens (each close to one
+    candidate's boundary), so every pairing of candidates shows up."""
+    import random
+
+    pool = ["0", "-7", "+12", "007", "1234567890123456789", "1.", ".5", "1.250",
+            "-3.5e+2", "1e5", "e5", "2024-02-30", "2024-1-02", "2024-01-02",
+            "2024-01-02 03:04:05", "2024-01-02T03:04:05", "2024-01-02 03:04:05.123",
+            "2024-01-02T03:04:05-0300", "2024-01-02 03:04", "true", "FALSE", "yes",
+            "", "null", None, "  1", "1 ", "NaN", "x\n"]
+    rng = random.Random(7)
+    names = [f"c{i}" for i in range(60)]
+    cols = [rng.sample(pool, rng.randint(1, 4)) for _ in names]
+    n = 4
+    rows = [tuple((vals * n)[i] for vals in cols) for i in range(n)]
+    raw = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in names))
+    got = infer_seed_schema(raw)
+    assert got == _infer_eight_aggregates(raw)
+    assert {type(f.dataType) for f in got.fields} >= {
+        T.LongType, T.DecimalType, T.DateType, T.TimestampType, T.BooleanType, T.StringType}
+
+
+def test_mask_inference_matches_eight_aggregate_form_on_shipped_csvs(spark):
+    from olist_snowflake_dbt_spark.sources.seeds import _read_raw_strings
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    demo = os.path.join(root, "olist_snowflake_dbt_spark", "models", "demo_seeds")
+    paths = [os.path.join(root, "fixtures", "seed_customers.csv")] + [
+        os.path.join(demo, f) for f in sorted(os.listdir(demo))]
+    for path in paths:
+        raw = _read_raw_strings(spark, path)
+        assert infer_seed_schema(raw) == _infer_eight_aggregates(raw), path
+
+
+def test_raw_read_is_one_projection_over_the_csv_scan(spark, tmp_path):
+    """BOM/whitespace header cleanup and the NULL-literal mapping are one
+    ``select``, not one re-analysed ``withColumn`` per column."""
+    from olist_snowflake_dbt_spark.sources.seeds import _read_raw_strings
+
+    raw = _read_raw_strings(spark, _write(tmp_path))
+    plan = raw._jdf.queryExecution().analyzed()
+    assert plan.nodeName() == "Project"
+    assert plan.child().nodeName() == "LogicalRelation"
+    assert raw.columns == ["id", "amount", "when_date", "when_ts", "flag", "name",
+                           "zip", "empty"]
+
+
+# ---------------------------------------------------------------------
+# Publish read-back
+# ---------------------------------------------------------------------
+
+def test_unpartitioned_publish_is_one_job_with_the_footer_schema(spark, tmp_path):
+    """An unpartitioned ``materialize_table`` runs only its write job: the
+    read-back takes the written frame's schema instead of a footer-
+    inference job, and that schema equals what footer inference reads."""
+    from olist_snowflake_dbt_spark.plans.materialize import materialize_table
+
+    df = spark.sql("""
+        SELECT CAST(id AS INT) AS not_null_int,
+               CAST(id AS DECIMAL(12, 3)) AS dec,
+               TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ntz,
+               TIMESTAMP'2024-01-02 03:04:05' AS ts,
+               array(id, id + 1) AS arr,
+               map('k', named_struct('a', id, 'b', array('x'))) AS m,
+               named_struct('x', id, 'y', array(named_struct('z', id))) AS st,
+               CAST(NULL AS STRING) AS nothing
+        FROM range(5)""")
+    assert not df.schema["not_null_int"].nullable
+    sc = spark.sparkContext
+    sc.setJobGroup("publish-readback", "publish-readback")
+    try:
+        rel = materialize_table(spark, "publish_readback", df, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("publish-readback")) == 1
+    assert rel.df.schema == spark.read.parquet(rel.path).schema
+    assert rel.df.schema["not_null_int"].nullable
+    assert sorted(r.not_null_int for r in spark.table("publish_readback").collect()) == [
+        0, 1, 2, 3, 4]

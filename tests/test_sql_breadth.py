@@ -192,3 +192,17 @@ def test_session_window_exact_gap_boundary(spark):
         ("2024-01-01 00:00:00", 2),
         ("2024-01-01 01:30:00", 1),
     ]
+
+
+def test_seed_csv_inference_reads_this_checkouts_fixture():
+    """The query and its DuckDB oracle both read the fixture shipped next
+    to the package, wherever the checkout lives."""
+    import os
+
+    from olist_snowflake_dbt_spark import queries_sql_breadth as B
+    from olist_snowflake_dbt_spark.queries import ORACLE_SQL
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(B.__file__)))
+    assert B._SEED_FIXTURE == os.path.join(root, "fixtures", "seed_customers.csv")
+    assert os.path.isfile(B._SEED_FIXTURE)
+    assert f"read_csv('{B._SEED_FIXTURE}'" in ORACLE_SQL["seed_csv_inference"]
