@@ -1089,7 +1089,9 @@ def exact_global_rank(
 
     Returns ``(id, order_col, global_rank[, phase][, *carry_cols])``."""
     carry_cols = [str(c) for c in carry_cols]
-    reserved = {id_col, order_col, "global_rank", "phase", "__ord", "__bkt"}
+    reserved = {id_col, order_col, "global_rank", "__ord", "__bkt"}
+    if phases > 0:
+        reserved.add("phase")
     bad = reserved.intersection(carry_cols)
     if bad or len(set(carry_cols)) != len(carry_cols):
         raise ValueError(

@@ -267,7 +267,9 @@ class DynamicTable:
 
         ``state_partitions`` sizes the stream's state shuffle to state
         volume (#group keys), not the batch default; the cap and
-        checkpoint rules are :func:`streaming.events._drain`'s."""
+        checkpoint rules are :func:`streaming.events._drain`'s. A full
+        refresh still passes its own checkpoint directory, so it keeps
+        the slot cap rather than the one-shot input-size cap."""
         from ..streaming.events import _drain
 
         table = self._table

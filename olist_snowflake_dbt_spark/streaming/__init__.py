@@ -14,8 +14,9 @@ Design for scale (1000 executors, unbounded input):
 - ``spark.sql.shuffle.partitions`` is baked into a streaming
   checkpoint at first run — size it for the target cluster BEFORE
   starting the query (session.py's default applies here too). The
-  bounded drains scope it per query and cap it at the cores; see
-  ``events._drain``.
+  bounded drains scope it per query and cap it at the cores, and a
+  one-shot drain (throwaway checkpoint) over a file source at its input
+  size over AQE's advisory partition size; see ``events._drain``.
 - The memory sink + AvailableNow trigger used by tests/queries is the
   bounded-replay harness; a production deployment swaps the sink for
   kafka/delta/parquet with exactly-once file sinks and keeps every

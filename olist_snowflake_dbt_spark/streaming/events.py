@@ -20,6 +20,7 @@ from typing import Iterable
 from urllib.parse import urlparse
 
 import pandas as pd
+from py4j.java_gateway import is_instance_of
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -316,6 +317,38 @@ _FS_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+_FILE_FORMAT = "org.apache.spark.sql.execution.datasources.FileFormat"
+
+
+def _file_stream_bytes(df: DataFrame) -> int | None:
+    """Bytes the streaming leaves of ``df`` read from a fresh start: per
+    leaf, the ``sizeInBytes`` of its batch twin (same format, options,
+    schema and path, so ``pathGlobFilter`` counts only the files the
+    stream lists). ``None`` when a streaming leaf is not a v1 file
+    source (Python data source, MemoryStream, rate, Kafka): its size is
+    unknown. Batch leaves (a stream-static join's dimension) are not
+    counted."""
+    spark = df.sparkSession
+    gateway = spark.sparkContext._gateway
+    total = 0
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            return None
+        source = leaf.dataSource()
+        if not is_instance_of(gateway, source.providingInstance(), _FILE_FORMAT):
+            return None
+        # the stream's options carry its ``path``, which load() reads
+        reader = spark._jsparkSession.read().format(source.className())
+        reader = reader.options(source.options())
+        schema = source.userSpecifiedSchema()
+        if schema.isDefined():
+            reader = reader.schema(schema.get())
+        total += reader.load().queryExecution().optimizedPlan().stats().sizeInBytes()
+    return total
 
 
 def _drain(
@@ -333,6 +366,18 @@ def _drain(
       with a fixed state-store commit and Python-worker cost, so wider
       only adds task waves. A restart reuses the count recorded in the
       checkpoint, so the cap acts on first starts only.
+    - with a throwaway checkpoint (no ``checkpoint`` and no session
+      ``spark.sql.streaming.checkpointLocation``: the memory-sink drains
+      of :func:`run_available_now` and :func:`run_process_all`) the
+      width is also capped at ``ceil(input bytes / advisory size)``,
+      the partition target AQE would coalesce a batch shuffle to
+      (``spark.sql.adaptive.advisoryPartitionSizeInBytes``; Spark turns
+      AQE off for stateful streams). Input bytes are known only when
+      every streaming leaf is a file source (:func:`_file_stream_bytes`);
+      otherwise only the slot cap applies. A durable checkpoint keeps
+      the slot cap: it records the width at first start for every
+      restart, and sizing that by the first input would pin a growing
+      stream to the first input's width.
     - a local checkpoint (the memory sink's temporary one, or a ``file:``
       or schemeless path under a ``file:///`` default FS) uses the
       FileSystem checkpoint manager unless the session sets one. Without
@@ -353,6 +398,14 @@ def _drain(
     try:
         if state_partitions is not None:
             cap = min(state_partitions, spark.sparkContext.defaultParallelism)
+            # writer._df: the frame the writer was made from
+            size = None if path else _file_stream_bytes(writer._df)
+            if size is not None:
+                utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+                advisory = utils.byteStringAsBytes(
+                    conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+                )
+                cap = min(cap, max(1, -(-size // advisory)))
             conf.set("spark.sql.shuffle.partitions", str(cap))
         if set_manager:
             conf.set(_CHECKPOINT_MANAGER, _FS_CHECKPOINT_MANAGER)
@@ -386,8 +439,11 @@ def run_available_now(
     real streaming query (state store, watermarks, micro-batches) and
     terminates. Production uses the same plan with a durable sink.
 
-    ``state_partitions`` sizes the stream's state shuffle; see
-    :func:`_drain` for the cap and checkpoint rules."""
+    ``state_partitions`` is the upper bound of the stream's state
+    shuffle. The memory sink's checkpoint is throwaway, so over a file
+    source the width is also sized to the input, one partition per
+    advisory partition size (AQE's batch target); see :func:`_drain`
+    for the cap and checkpoint rules."""
     name = name or f"stream_sink_{os.getpid()}_{next(_sink_counter)}"
     writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
     _drain(result.sparkSession, writer, None, state_partitions)

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout first, whichever directory pytest runs from
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Harness-level opt-in for the container-local protobuf site (must
 # precede the package import, whose __init__ consumes the env var and

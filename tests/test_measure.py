@@ -10,7 +10,7 @@ import sys
 
 import pytest
 
-from tools.measure import time_noop, write_scaling
+from tools.measure import cleanup, time_noop, write_scaling
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -55,6 +55,17 @@ def test_timer_uncaches_after_success_and_failure(spark, fail):
         assert not spark.catalog.isCached(view)
     finally:
         spark.catalog.dropTempView(view)
+
+
+def test_cleanup_empties_the_operator_cache_registry(spark):
+    from olist_snowflake_dbt_spark.operators._cache import _REGISTRY, scoped_persist
+
+    frame = scoped_persist(spark.range(10).selectExpr("id * 3 AS x"))
+    frame.count()
+    assert _REGISTRY.get(spark)
+    cleanup(spark)
+    assert not _REGISTRY.get(spark)
+    assert not frame.is_cached
 
 
 def test_write_scaling_replaces_only_what_it_names(tmp_path):

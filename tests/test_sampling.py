@@ -617,3 +617,17 @@ class TestExactGlobalRank:
         # exact NTILE balance: sizes differ by at most 1
         assert max(phases.values()) - min(phases.values()) <= 1
         assert sum(phases.values()) == 103
+
+    def test_phase_is_a_carry_name_only_without_phases(self, spark):
+        from olist_snowflake_dbt_spark.operators.sampling import (
+            exact_global_rank,
+        )
+
+        df = spark.createDataFrame(
+            [(i, i % 7, i * 10) for i in range(20)], "doc_id long, s long, phase long"
+        )
+        out = exact_global_rank(df, "s", "doc_id", carry_cols=["phase"]).collect()
+        assert sorted(r.global_rank for r in out) == list(range(1, 21))
+        assert all(r.phase == r.doc_id * 10 for r in out)
+        with pytest.raises(ValueError, match="carry_cols"):
+            exact_global_rank(df, "s", "doc_id", phases=2, carry_cols=["phase"])

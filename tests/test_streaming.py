@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -882,10 +884,12 @@ def test_drain_leaves_user_checkpoint_manager_alone(spark, sf_dir, tmp_path):
     assert [manager for manager, _ in seen] == [user_manager]
 
 
-def test_drain_caps_state_partitions_at_task_slots(spark, sf_dir):
+def test_drain_caps_state_partitions_at_task_slots(spark, sf_dir, tmp_path):
     """A state shuffle wider than the cores only adds task waves: asking
     for more partitions than ``defaultParallelism`` runs with exactly
-    ``defaultParallelism``, and the rows equal an uncapped run's."""
+    ``defaultParallelism``, and the rows equal an uncapped run's. Both
+    drains keep a durable checkpoint, so the input-size cap of a
+    one-shot drain does not apply."""
     from olist_snowflake_dbt_spark.streaming.events import _drain
 
     slots = spark.sparkContext.defaultParallelism
@@ -893,7 +897,7 @@ def test_drain_caps_state_partitions_at_task_slots(spark, sf_dir):
 
     def drain(name, state_partitions):
         writer = counts.writeStream.format("memory").queryName(name)
-        q = _drain(spark, writer.outputMode("complete"),
+        q = _drain(spark, writer.outputMode("complete"), str(tmp_path / name),
                    state_partitions=state_partitions)
         parts = {op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]}
         return parts, sorted(spark.table(name).collect())
@@ -908,3 +912,119 @@ def test_drain_caps_state_partitions_at_task_slots(spark, sf_dir):
     assert capped_parts == {slots}
     assert uncapped_parts == {slots + 3}
     assert capped == uncapped and capped
+
+
+# -- one-shot drains: state shuffle sized to the input -------------------
+
+
+@pytest.fixture(scope="module")
+def sf001_dir(sf_dir):
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+def _drain_to_memory(spark, frame, name, mode, state_partitions, checkpoint=None,
+                     process_all=False):
+    """(state-operator widths, batch count, sorted sink rows) of one drain."""
+    from olist_snowflake_dbt_spark.streaming.events import _drain
+
+    writer = frame.writeStream.format("memory").queryName(name).outputMode(mode)
+    q = _drain(spark, writer, checkpoint, state_partitions, process_all=process_all)
+    parts = {op["numShufflePartitions"]
+             for p in q.recentProgress for op in p["stateOperators"]}
+    batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    return parts, batches, sorted(spark.table(name).collect())
+
+
+def test_one_shot_drain_sizes_state_shuffle_to_its_input(spark, sf001_dir, tmp_path):
+    """0.2 MB of events is far below AQE's 64 MB advisory partition
+    size: the memory-sink drain runs one state partition, and its rows
+    equal a durable-checkpoint drain's at ``defaultParallelism``."""
+    slots = spark.sparkContext.defaultParallelism
+    counts = windowed_event_counts(stream_events(spark, sf001_dir), "15 minutes")
+    one_shot_parts, _, one_shot = _drain_to_memory(
+        spark, counts, "one_shot_counts", "complete", 8)
+    durable_parts, _, durable = _drain_to_memory(
+        spark, counts, "durable_counts", "complete", slots, str(tmp_path / "ckpt"))
+    assert one_shot_parts == {1}
+    assert durable_parts == {slots}
+    assert one_shot == durable and one_shot
+
+
+def test_one_shot_width_is_input_over_advisory_size(spark, sf001_dir):
+    """``ceil(input bytes / advisory size)``, parsed from Spark's byte
+    string: a 100 KiB target splits the 216 KiB events file three ways."""
+    from olist_snowflake_dbt_spark.streaming.events import _file_stream_bytes
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    events = stream_events(spark, sf001_dir)
+    assert 2 * 102400 < _file_stream_bytes(events) <= 3 * 102400
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100k")
+    try:
+        parts, _, rows = _drain_to_memory(
+            spark, windowed_event_counts(events, "15 minutes"), "advisory_counts",
+            "complete", 8)
+    finally:
+        spark.conf.set(key, old)
+    assert parts == {min(3, spark.sparkContext.defaultParallelism)} and rows
+
+
+def test_durable_checkpoint_keeps_the_slot_cap(spark, sf_dir, tmp_path):
+    """A checkpoint records the width for every restart, so a durable
+    drain is not sized by its first input."""
+    counts = windowed_event_counts(stream_events(spark, sf_dir), "15 minutes")
+    parts, _, rows = _drain_to_memory(
+        spark, counts, "durable_slot_cap", "complete", 8, str(tmp_path / "ckpt"))
+    assert parts == {min(8, spark.sparkContext.defaultParallelism)} and rows
+
+
+def test_non_file_source_keeps_the_slot_cap(spark):
+    """A Python data source has no batch twin to size: today's cap."""
+    from olist_snowflake_dbt_spark.sources import pyds
+    from olist_snowflake_dbt_spark.streaming.events import _file_stream_bytes
+
+    pyds.register(spark)
+    docs = (spark.readStream.format("synthetic_corpus")
+            .option("numDocs", 300).option("batchSize", 128).load())
+    assert _file_stream_bytes(docs) is None
+    assert _file_stream_bytes(spark.readStream.format("rate").load()) is None
+    parts, batches, rows = _drain_to_memory(
+        spark, docs.groupBy("source").count(), "pyds_slot_cap", "complete", 8,
+        process_all=True)
+    assert parts == {min(8, spark.sparkContext.defaultParallelism)}
+    assert batches > 1 and sum(r["count"] for r in rows) == 300
+
+
+def test_multi_batch_drain_rows_match_at_width_one(spark, batch_events, tmp_path):
+    """Three micro-batches of Python state at one partition give the
+    same per-batch updates as at today's width."""
+    src = str(tmp_path / "events_split")
+    batch_events.repartition(3).write.parquet(src)
+    stream = (spark.readStream.schema(batch_events.schema)
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    totals = user_running_totals(stream)
+    narrow_parts, narrow_batches, narrow = _drain_to_memory(
+        spark, totals, "split_one_shot", "update", 8)
+    wide_parts, wide_batches, wide = _drain_to_memory(
+        spark, totals, "split_durable", "update", 8, str(tmp_path / "ckpt"))
+    assert narrow_parts == {1}
+    assert wide_parts == {min(8, spark.sparkContext.defaultParallelism)}
+    assert narrow_batches == wide_batches == 3
+    assert narrow == wide and narrow
+
+
+def test_input_size_counts_only_the_streamed_files(spark, sf_dir):
+    """The events stream lists ``sf_dir`` through ``pathGlobFilter``:
+    ``documents.parquet`` and the other tables beside it are not counted."""
+    from olist_snowflake_dbt_spark.streaming.events import _file_stream_bytes
+
+    assert os.path.exists(os.path.join(sf_dir, "documents.parquet"))
+    events = stream_events(spark, sf_dir)
+    size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+    assert _file_stream_bytes(events) == size
+    bare = (spark.readStream.schema("event_id long")
+            .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
+    assert _file_stream_bytes(bare) == size  # a source frame before any transform
+    static = read_table(spark, sf_dir, "documents").select("doc_id")
+    joined = events.join(static, events.event_id == static.doc_id, "left")
+    assert _file_stream_bytes(joined) == _file_stream_bytes(events)

@@ -29,7 +29,7 @@ from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import local_env  # noqa: E402,F401  (harness opt-in: protobuf site for tws)
 

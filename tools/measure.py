@@ -35,11 +35,15 @@ def warm(spark, *sf_dirs: str) -> None:
 
 
 def cleanup(spark) -> None:
-    """Drop every cached frame (operators persist intermediates for the
-    life of their query), then run a JVM GC: broadcast blocks and shuffle
-    state are only reclaimed by the ContextCleaner after one, and without
-    it queries ~30+ into a run measured 10-20x their true cost
-    (dedup_simhash 54 s polluted vs 3 s clean)."""
+    """Release the operator-registered frames (their registry holds
+    strong references until released), drop every cached frame, then
+    run a JVM GC: broadcast blocks and shuffle state are only reclaimed
+    by the ContextCleaner after one, and without it queries ~30+ into a
+    run measured 10-20x their true cost (dedup_simhash 54 s polluted vs
+    3 s clean)."""
+    from olist_snowflake_dbt_spark.operators._cache import release_operator_caches
+
+    release_operator_caches(spark)
     spark.catalog.clearCache()
     spark.sparkContext._jvm.System.gc()
 
