@@ -15,8 +15,8 @@ Design for scale (1000 executors, unbounded input):
   checkpoint at first run — size it for the target cluster BEFORE
   starting the query (session.py's default applies here too). The
   bounded drains scope it per query and cap it at the cores, and a
-  one-shot drain (throwaway checkpoint) over a file source at its input
-  size over AQE's advisory partition size; see ``events._drain``.
+  one-shot drain (throwaway checkpoint) over at most 256 KiB of files
+  runs one state partition; see ``events._drain``.
 - The memory sink + AvailableNow trigger used by tests/queries is the
   bounded-replay harness; a production deployment swaps the sink for
   kafka/delta/parquet with exactly-once file sinks and keeps every

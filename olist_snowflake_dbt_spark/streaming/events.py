@@ -318,6 +318,9 @@ _FS_CHECKPOINT_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 _FILE_FORMAT = "org.apache.spark.sql.execution.datasources.FileFormat"
+# A one-shot drain over at most this many bytes of files runs one state
+# partition; see _drain for the measurements behind it.
+_ONE_PARTITION_INPUT_BYTES = 256 * 1024
 
 
 def _file_stream_bytes(df: DataFrame) -> int | None:
@@ -368,16 +371,24 @@ def _drain(
       checkpoint, so the cap acts on first starts only.
     - with a throwaway checkpoint (no ``checkpoint`` and no session
       ``spark.sql.streaming.checkpointLocation``: the memory-sink drains
-      of :func:`run_available_now` and :func:`run_process_all`) the
-      width is also capped at ``ceil(input bytes / advisory size)``,
-      the partition target AQE would coalesce a batch shuffle to
-      (``spark.sql.adaptive.advisoryPartitionSizeInBytes``; Spark turns
-      AQE off for stateful streams). Input bytes are known only when
-      every streaming leaf is a file source (:func:`_file_stream_bytes`);
-      otherwise only the slot cap applies. A durable checkpoint keeps
-      the slot cap: it records the width at first start for every
-      restart, and sizing that by the first input would pin a growing
-      stream to the first input's width.
+      of :func:`run_available_now` and :func:`run_process_all`) a drain
+      whose streaming leaves are all file sources
+      (:func:`_file_stream_bytes`) holding at most
+      ``_ONE_PARTITION_INPUT_BYTES`` (256 KiB) runs one state partition,
+      trading wall time for the fixed CPU cost of the other tasks.
+      Spark turns AQE off for stateful streams; AQE would coalesce such
+      a shuffle (its raw rows measured 1.4-1.9x their Parquet bytes)
+      into one partition too, being under its 1 MB
+      ``coalescePartitions.minPartitionSize``. The bound is tighter
+      than AQE's because work in Python state follows keys, not bytes.
+      On 4 cores, ``stream_stateful_totals`` at one partition in place
+      of four: 216 KiB of sf0.01 events (150 users) 1.4 → 1.6 s wall,
+      4.5 → 3.0 s CPU; 222 KiB holding 1,500 users 2.7 → 6.5 s wall,
+      9.8 → 8.4 s CPU; 425 KiB holding 1,500 users 2.6 → 6.3 s wall;
+      sf1 (12 MB) 17 → 54 s wall. A larger or unknown input keeps the
+      slot cap, and so does a durable checkpoint: it records the width
+      at first start for every restart, and sizing that by the first
+      input would pin a growing stream to the first input's width.
     - a local checkpoint (the memory sink's temporary one, or a ``file:``
       or schemeless path under a ``file:///`` default FS) uses the
       FileSystem checkpoint manager unless the session sets one. Without
@@ -399,13 +410,9 @@ def _drain(
         if state_partitions is not None:
             cap = min(state_partitions, spark.sparkContext.defaultParallelism)
             # writer._df: the frame the writer was made from
-            size = None if path else _file_stream_bytes(writer._df)
-            if size is not None:
-                utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
-                advisory = utils.byteStringAsBytes(
-                    conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-                )
-                cap = min(cap, max(1, -(-size // advisory)))
+            size = None if path or cap == 1 else _file_stream_bytes(writer._df)
+            if size is not None and size <= _ONE_PARTITION_INPUT_BYTES:
+                cap = 1
             conf.set("spark.sql.shuffle.partitions", str(cap))
         if set_manager:
             conf.set(_CHECKPOINT_MANAGER, _FS_CHECKPOINT_MANAGER)
@@ -441,9 +448,8 @@ def run_available_now(
 
     ``state_partitions`` is the upper bound of the stream's state
     shuffle. The memory sink's checkpoint is throwaway, so over a file
-    source the width is also sized to the input, one partition per
-    advisory partition size (AQE's batch target); see :func:`_drain`
-    for the cap and checkpoint rules."""
+    source of at most 256 KiB the stream runs one state partition; see
+    :func:`_drain` for the cap and checkpoint rules."""
     name = name or f"stream_sink_{os.getpid()}_{next(_sink_counter)}"
     writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
     _drain(result.sparkSession, writer, None, state_partitions)

@@ -936,9 +936,9 @@ def _drain_to_memory(spark, frame, name, mode, state_partitions, checkpoint=None
 
 
 def test_one_shot_drain_sizes_state_shuffle_to_its_input(spark, sf001_dir, tmp_path):
-    """0.2 MB of events is far below AQE's 64 MB advisory partition
-    size: the memory-sink drain runs one state partition, and its rows
-    equal a durable-checkpoint drain's at ``defaultParallelism``."""
+    """216 KiB of events is within the one-partition input bound: the
+    memory-sink drain runs one state partition, and its rows equal a
+    durable-checkpoint drain's at ``defaultParallelism``."""
     slots = spark.sparkContext.defaultParallelism
     counts = windowed_event_counts(stream_events(spark, sf001_dir), "15 minutes")
     one_shot_parts, _, one_shot = _drain_to_memory(
@@ -950,23 +950,24 @@ def test_one_shot_drain_sizes_state_shuffle_to_its_input(spark, sf001_dir, tmp_p
     assert one_shot == durable and one_shot
 
 
-def test_one_shot_width_is_input_over_advisory_size(spark, sf001_dir):
-    """``ceil(input bytes / advisory size)``, parsed from Spark's byte
-    string: a 100 KiB target splits the 216 KiB events file three ways."""
-    from olist_snowflake_dbt_spark.streaming.events import _file_stream_bytes
+def test_one_shot_width_is_one_only_up_to_the_input_bound(spark, sf001_dir, monkeypatch):
+    """One state partition for an input of at most
+    ``_ONE_PARTITION_INPUT_BYTES``; one byte over it keeps the slot cap,
+    with nothing in between."""
+    from olist_snowflake_dbt_spark.streaming import events as ev
 
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     events = stream_events(spark, sf001_dir)
-    assert 2 * 102400 < _file_stream_bytes(events) <= 3 * 102400
-    old = spark.conf.get(key)
-    spark.conf.set(key, "100k")
-    try:
-        parts, _, rows = _drain_to_memory(
-            spark, windowed_event_counts(events, "15 minutes"), "advisory_counts",
-            "complete", 8)
-    finally:
-        spark.conf.set(key, old)
-    assert parts == {min(3, spark.sparkContext.defaultParallelism)} and rows
+    size = ev._file_stream_bytes(events)
+    assert size <= ev._ONE_PARTITION_INPUT_BYTES
+    counts = windowed_event_counts(events, "15 minutes")
+    widths = {}
+    for bound in (size, size - 1):
+        monkeypatch.setattr(ev, "_ONE_PARTITION_INPUT_BYTES", bound)
+        widths[bound], _, rows = _drain_to_memory(
+            spark, counts, f"input_bound_{bound}", "complete", 8)
+        assert rows
+    assert widths == {size: {1},
+                      size - 1: {min(8, spark.sparkContext.defaultParallelism)}}
 
 
 def test_durable_checkpoint_keeps_the_slot_cap(spark, sf_dir, tmp_path):
