@@ -65,9 +65,3 @@ def quantize8(a: Column | str) -> tuple[Column, Column]:
         .cast("int"),
     )
     return scale, codes
-
-
-def euclidean_distance(a: Column | str, b: Column | str) -> Column:
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    diffs = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x * x))

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators._cache import scoped_persist
+
 MEDIA_META_SCHEMA = StructType(
     [
         StructField("media_type", StringType()),   # image | audio | video
@@ -333,12 +335,12 @@ def audio_fp_pairs(
     the Hamming filter is a codegen'd ``bit_count(a^b)`` BEFORE the
     pair distinct. The banded signature frame is persisted for the
     self-join's two sides; the caller owns the cache lifetime
-    (:func:`release_signature_caches`)."""
+    (:func:`~..operators._cache.release_operator_caches`)."""
     _check_banded_hamming(max_hamming, bands)
     from ..functions.hashing import hamming64, simhash_band_keys
 
     sig = audio_fingerprint(media)
-    banded = _track_persist(
+    banded = scoped_persist(
         sig.select(
             "media_id",
             "afp",
@@ -362,31 +364,6 @@ def audio_fp_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-
-
-# Signature frames persisted by the pair/admission operators below.
-# Their plans are lazy, so the operator cannot unpersist before the
-# caller's consuming action — the CALLER owns the cache lifetime:
-# either run release_signature_caches() after the action, or rely on
-# spark.catalog.clearCache() between queries (what bench/gate do).
-_PERSISTED_SIGS: list[DataFrame] = []
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    _PERSISTED_SIGS.append(df.persist())
-    return df
-
-
-def release_signature_caches() -> None:
-    """Unpersist every signature frame cached by :func:`phash_pairs`,
-    :func:`phash_incremental_admit` and :func:`video_phash_pairs` in
-    this process. Safe to call at any time; frames still referenced by
-    un-executed plans simply recompute."""
-    while _PERSISTED_SIGS:
-        try:
-            _PERSISTED_SIGS.pop().unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
 
 
 def _check_banded_hamming(max_hamming: int, bands: int) -> None:
@@ -416,13 +393,14 @@ def phash_pairs(
     codegen'd ``bit_count(a^b)``, and it runs BEFORE the pair distinct
     so the final shuffle carries only true near-dups. The banded
     signature frame is persisted for the self-join's two sides; the
-    caller owns the cache lifetime (:func:`release_signature_caches`).
+    caller owns the cache lifetime
+    (:func:`~..operators._cache.release_operator_caches`).
     """
     _check_banded_hamming(max_hamming, bands)
     from ..functions.hashing import hamming64, simhash_band_keys
 
     sig = perceptual_hash(media)
-    banded = _track_persist(
+    banded = scoped_persist(
         sig.select(
             "media_id",
             "phash",
@@ -476,7 +454,7 @@ def phash_incremental_admit(
 
     The batch's banded signature frame is persisted (it feeds both
     rejection joins); the caller owns the cache lifetime
-    (:func:`release_signature_caches`)."""
+    (:func:`~..operators._cache.release_operator_caches`)."""
     _check_banded_hamming(max_hamming, bands)
     from ..functions.hashing import hamming64, simhash_band_keys
 
@@ -491,7 +469,7 @@ def phash_incremental_admit(
             ).alias("__band"),
         )
 
-    bn = _track_persist(banded(sig))
+    bn = scoped_persist(banded(sig))
     bs = banded(standing_sigs).select(
         F.col("__band"),
         F.col("media_id").alias("__sid"),
@@ -585,8 +563,8 @@ def video_phash_pairs(
 
     The deduped frame-signature frame is persisted (hot-frame filter +
     both self-join sides); the caller owns the cache lifetime
-    (:func:`release_signature_caches`)."""
-    fp = _track_persist(
+    (:func:`~..operators._cache.release_operator_caches`)."""
+    fp = scoped_persist(
         frame_phashes(media, frame_bytes, max_frames)
         .select("media_id", "phash")
         .dropDuplicates()

@@ -212,40 +212,3 @@ def evaluate_test(
     else:
         status = TestStatus.PASS
     return TestResult(name, status, failures)
-
-
-# -- in-flight observed metrics (df.observe) ---------------------------
-
-
-def observe_quality(
-    df: DataFrame,
-    name: str,
-    not_null_cols: Sequence[str] = (),
-    extra: dict[str, "F.Column"] | None = None,
-) -> tuple[DataFrame, "Observation"]:
-    """Attach zero-cost quality counters to a plan via ``df.observe``.
-
-    The returned DataFrame is semantically identical to the input; the
-    accumulator-backed metrics (row count, per-column null counts, any
-    caller expressions) materialize on the driver after the FIRST action
-    on the frame — so a production write gets its quality audit from the
-    same single pass that produced the data, instead of a second scan
-    the way ``evaluate_test`` recomputes failing rows. Use this for
-    always-on pipeline telemetry and the test builders above for gating
-    (they enumerate the failing rows; this only counts).
-
-    Returns ``(observed_df, observation)``; read
-    ``observation.get`` after an action. Works on batch frames; for
-    streams use a StreamingQueryListener with the same observe call.
-    """
-    from pyspark.sql import Observation
-
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in not_null_cols:
-        metrics.append(
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"null_{c}")
-        )
-    for alias, col in (extra or {}).items():
-        metrics.append(col.alias(alias))
-    obs = Observation(name)
-    return df.observe(obs, *metrics), obs

@@ -32,11 +32,6 @@ from pyspark.sql import functions as F
 from ..plans.materialize import _atomic_swap, _stage
 
 
-def incremental_append(existing: DataFrame, batch: DataFrame) -> DataFrame:
-    """``append``: keep everything, add the batch (strategies.sql:16)."""
-    return existing.unionByName(batch)
-
-
 def incremental_merge(
     existing: DataFrame,
     batch: DataFrame,

@@ -331,32 +331,6 @@ def group_vector_sums(
     return gf.applyInPandas(kernel, schema=schema)
 
 
-def group_centroids(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    group_col: str = "label",
-    dim: int = 64,
-) -> DataFrame:
-    """Per-group mean vector (the production companion of
-    :func:`group_vector_sums`): (group, centroid array<double>)."""
-    sums = group_vector_sums(df, vec_col, group_col, dim)
-    return (
-        sums.withColumn(
-            "__v", (F.col("dim_sum") / F.col("n_vecs")).cast("double")
-        )
-        .groupBy(group_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("dim_idx", "__v"))
-            ).alias("__pairs")
-        )
-        .select(
-            group_col,
-            F.transform(F.col("__pairs"), lambda p: p["__v"]).alias("centroid"),
-        )
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,

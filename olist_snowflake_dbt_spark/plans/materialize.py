@@ -256,20 +256,16 @@ class DynamicTable:
         self._table = IncrementalTable(spark, path, partition_by)
 
     def refresh(
-        self,
-        result_stream: DataFrame,
-        checkpoint: str | None = None,
-        state_partitions: int | None = 8,
+        self, result_stream: DataFrame, checkpoint: str | None = None
     ) -> None:
         """Run the streaming SELECT to its current end (AvailableNow) and
         merge every emitted update into the table. ``checkpoint=None``
         forces a FULL refresh (fresh checkpoint → full source replay).
 
-        ``state_partitions`` sizes the stream's state shuffle to state
-        volume (#group keys), not the batch default; the cap and
-        checkpoint rules are :func:`streaming.events._drain`'s. A full
-        refresh still passes its own checkpoint directory, so it keeps
-        the slot cap rather than the one-shot input-size cap."""
+        :func:`streaming.events._drain` sets the stream's state width. A
+        full refresh still passes its own checkpoint directory, so it
+        keeps the slot cap ``min(8, defaultParallelism)`` rather than the
+        one-shot input-size width."""
         from ..streaming.events import _drain
 
         table = self._table
@@ -280,7 +276,7 @@ class DynamicTable:
 
         ckpt = checkpoint or f"{self.path}.ckpt-{uuid.uuid4().hex[:8]}"
         writer = result_stream.writeStream.foreachBatch(_merge_batch)
-        _drain(self.spark, writer.outputMode("update"), ckpt, state_partitions)
+        _drain(self.spark, writer.outputMode("update"), ckpt)
         if checkpoint is None:
             shutil.rmtree(ckpt, ignore_errors=True)
 

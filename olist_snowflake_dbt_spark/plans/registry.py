@@ -374,13 +374,30 @@ class ModelRegistry:
         text (SQL body, or a Python builder's source), materialization,
         and config. The dbt analogue is the manifest node checksum
         slim-CI state selection compares (dbt-core contracts/graph/nodes
-        checksum field)."""
+        checksum field). The ``all`` aspect of :meth:`checksums_detail`."""
+        return {name: d["all"] for name, d in self.checksums_detail().items()}
+
+    def checksums_detail(self) -> dict[str, dict[str, str]]:
+        """Per-ASPECT definition checksums — dbt's ``state:modified``
+        sub-selector granularity (dbt-core state methods): ``body`` (the
+        builder text, plus the CURRENT values of any env_var() it reads
+        — env drift is body drift), ``configs`` (config minus contract),
+        ``contract`` (the contract config alone), ``relation`` (the
+        materialization type), and ``all`` (the combined checksum that
+        :meth:`checksums` returns)."""
         import hashlib
         import inspect
         import json as _json
         import os as _os
 
-        out: dict[str, str] = {}
+        def h(obj) -> str:
+            # json.dumps(sort_keys, default=str) canonicalizes nested
+            # dicts and non-JSON types alike
+            return hashlib.md5(
+                _json.dumps(obj, sort_keys=True, default=str).encode()
+            ).hexdigest()
+
+        out: dict[str, dict[str, str]] = {}
         for name, m in self._models.items():
             if isinstance(m.builder, str):
                 body = m.builder
@@ -389,67 +406,11 @@ class ModelRegistry:
                     body = inspect.getsource(m.builder)
                 except (OSError, TypeError):  # builtins/lambdas in REPLs
                     body = repr(m.builder)
-            payload = _json.dumps(
-                {
-                    "body": body,
-                    "materialized": m.materialized,
-                    # ALL config values participate — dbt's manifest
-                    # checksum covers contract/config changes, so a
-                    # contract-only edit (a dict value) must flip the
-                    # checksum for state:modified slim-CI selection;
-                    # json.dumps(sort_keys, default=str) canonicalizes
-                    # nested dicts and non-JSON types alike
-                    "config": dict(sorted(m.config.items())),
-                    "tags": sorted(m.tags),
-                    # env_var drift participates (dbt manifest.env_vars):
-                    # a model reading env_var('K') changes checksum when
-                    # K's VALUE changes, so state:modified slim-CI picks
-                    # it up without any SQL edit. Secret-prefixed names
-                    # contribute presence only, never the value.
-                    "env": {
-                        k: (
-                            "<secret-set>"
-                            if k.startswith(_ENV_SECRET_PREFIX)
-                            and k in _os.environ
-                            else _os.environ.get(k)
-                        )
-                        for k in sorted(set(_ENV_NAME_RE.findall(body)))
-                    },
-                },
-                sort_keys=True,
-                default=str,
-            )
-            out[name] = hashlib.md5(payload.encode()).hexdigest()
-        return out
-
-    def checksums_detail(self) -> dict[str, dict[str, str]]:
-        """Per-ASPECT definition checksums — dbt's ``state:modified``
-        sub-selector granularity (dbt-core state methods): ``body`` (the
-        builder text, plus the CURRENT values of any env_var() it reads
-        — env drift is body drift), ``configs`` (config minus contract),
-        ``contract`` (the contract config alone), ``relation`` (the
-        materialization type), and ``all`` (the combined checksum, equal
-        to :meth:`checksums`)."""
-        import hashlib
-        import inspect
-        import json as _json
-        import os as _os
-
-        def h(obj) -> str:
-            return hashlib.md5(
-                _json.dumps(obj, sort_keys=True, default=str).encode()
-            ).hexdigest()
-
-        alls = self.checksums()
-        out: dict[str, dict[str, str]] = {}
-        for name, m in self._models.items():
-            if isinstance(m.builder, str):
-                body = m.builder
-            else:
-                try:
-                    body = inspect.getsource(m.builder)
-                except (OSError, TypeError):
-                    body = repr(m.builder)
+            # env_var drift participates (dbt manifest.env_vars): a model
+            # reading env_var('K') changes checksum when K's VALUE
+            # changes, so state:modified slim-CI picks it up without any
+            # SQL edit. Secret-prefixed names contribute presence only,
+            # never the value.
             env = {
                 k: (
                     "<secret-set>"
@@ -460,7 +421,16 @@ class ModelRegistry:
             }
             cfg = {k: v for k, v in m.config.items() if k != "contract"}
             out[name] = {
-                "all": alls[name],
+                # ALL config values participate — dbt's manifest checksum
+                # covers contract/config changes, so a contract-only edit
+                # (a dict value) must flip it for state:modified
+                "all": h({
+                    "body": body,
+                    "materialized": m.materialized,
+                    "config": dict(sorted(m.config.items())),
+                    "tags": sorted(m.tags),
+                    "env": env,
+                }),
                 "body": h({"body": body, "env": env}),
                 "configs": h({"config": dict(sorted(cfg.items())),
                               "tags": sorted(m.tags)}),

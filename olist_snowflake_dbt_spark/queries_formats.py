@@ -340,7 +340,7 @@ def q_pyds_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("batchSize", 128)
         .load()
     )
-    sink = run_process_all(stream, "append", state_partitions=8)
+    sink = run_process_all(stream, "append")
     return sink.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.max("doc_id").cast("bigint").alias("max_doc"),

@@ -48,7 +48,7 @@ def q_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates exact DECIMAL; presentation cast to DOUBLE for driver
     repr parity (DuckDB renders DECIMAL as float64 through pandas)."""
     counts = windowed_event_counts(stream_events(spark, sf_dir), "15 minutes")
-    sink = run_available_now(counts, "complete", state_partitions=8)
+    sink = run_available_now(counts, "complete")
     return sink.withColumn("total_value", F.col("total_value").cast("double"))
 
 
@@ -80,7 +80,7 @@ def q_stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     [first_event, last_event + gap) bounds equal the batch
     gaps-and-islands construction."""
     sessions = session_stats(stream_events(spark, sf_dir), gap="30 minutes")
-    return run_available_now(sessions, "complete", state_partitions=8)
+    return run_available_now(sessions, "complete")
 
 
 @query(
@@ -110,7 +110,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "ts", "event_type"],
         watermark="10 days",
     )
-    sink = run_available_now(deduped, "append", state_partitions=8)
+    sink = run_available_now(deduped, "append")
     return sink.withColumn("value", F.col("value").cast("double"))
 
 
@@ -130,7 +130,7 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink keeps only the latest row per key per batch, and the
     single-file source replays as one batch."""
     totals = user_running_totals(stream_events(spark, sf_dir))
-    return run_available_now(totals, "update", state_partitions=8)
+    return run_available_now(totals, "update")
 
 
 @query(
@@ -160,7 +160,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = clicks_to_errors_join(
         stream_events(spark, sf_dir), horizon="10 minutes", watermark="365 days"
     )
-    return run_available_now(joined, "append", state_partitions=8)
+    return run_available_now(joined, "append")
 
 
 @query(
@@ -189,7 +189,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, dim, stream_key="user_id", dim_key="c_custkey",
         dim_cols=["c_mktsegment"],
     ).select("event_id", "user_id", "event_type", "c_mktsegment", "value")
-    sink = run_available_now(enriched, "append", state_partitions=8)
+    sink = run_available_now(enriched, "append")
     return sink.withColumn("value", F.col("value").cast("double"))
 
 
@@ -217,7 +217,7 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events(spark, sf_dir), "30 minutes", watermark="30 minutes",
         slide="10 minutes",
     )
-    sink = run_available_now(counts, "complete", state_partitions=8)
+    sink = run_available_now(counts, "complete")
     return sink.withColumn("total_value", F.col("total_value").cast("double"))
 
 
@@ -261,9 +261,7 @@ def q_stream_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         return run_available_now(
-            user_totals_tws(stream_events(spark, sf_dir)),
-            "update",
-            state_partitions=8,
+            user_totals_tws(stream_events(spark, sf_dir)), "update"
         )
     finally:
         if prev is None:
@@ -378,10 +376,7 @@ def q_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(log_dir)
     )
-    writer = cdc_apply_stream(
-        stream, state, ckpt, ["user_id"], "lsn", "op",
-        state_partitions=8, n_buckets=8,
-    )
+    writer = cdc_apply_stream(stream, state, ckpt, ["user_id"], "lsn", "op")
     _drain(spark, writer, ckpt)
     return cdc_state(spark, state, "op")
 
@@ -523,7 +518,7 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = clicks_left_outer_errors(
         stream, horizon="10 minutes", watermark="1 minute"
     )
-    sink = run_available_now(joined, "append", state_partitions=8)
+    sink = run_available_now(joined, "append")
     # the memory sink holds the rows; the staged replay files are done
     _shutil.rmtree(root, ignore_errors=True)
     return sink.filter(F.col("user_id") >= 0)
@@ -635,11 +630,11 @@ def q_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    # state_partitions=8: the same per-stream shuffle-partition scoping
-    # every other harness stream uses (the ~130k-row micro-batches pay
-    # 32-task shuffle overhead otherwise); admission output is
+    # _drain scopes the batches' shuffles to min(8, cores), as for every
+    # other harness stream (the ~130k-row micro-batches would pay the
+    # session's 32-task shuffles otherwise); admission output is
     # partitioning-independent (exact dedup by fingerprint)
-    writer = dedup_admission_stream(stream, state, ckpt, state_partitions=8)
+    writer = dedup_admission_stream(stream, state, ckpt)
     _drain(spark, writer, ckpt)
     assert n == spark.read.parquet(stage).count()
     # fp_bucket is the state's physical hash-partition key, not part

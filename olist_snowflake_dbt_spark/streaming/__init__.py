@@ -13,10 +13,11 @@ Design for scale (1000 executors, unbounded input):
   natural partitioning; no driver-side state anywhere.
 - ``spark.sql.shuffle.partitions`` is baked into a streaming
   checkpoint at first run — size it for the target cluster BEFORE
-  starting the query (session.py's default applies here too). The
-  bounded drains scope it per query and cap it at the cores, and a
-  one-shot drain (throwaway checkpoint) over at most 256 KiB of files
-  runs one state partition; see ``events._drain``.
+  starting the query (session.py's default applies here too). For the
+  bounded drains ``events._drain`` alone derives it, per query:
+  ``min(8, cores)``, or one state partition for a one-shot drain
+  (throwaway checkpoint) over at most 256 KiB of files. No caller
+  passes a width.
 - The memory sink + AvailableNow trigger used by tests/queries is the
   bounded-replay harness; a production deployment swaps the sink for
   kafka/delta/parquet with exactly-once file sinks and keeps every

@@ -35,21 +35,14 @@ from pyspark.sql.types import (
 )
 
 def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """Probe the batch reader's resolved schema for events.parquet.
+    """The on-disk schema of events.parquet: ``ts`` is int64 for a
+    TIMESTAMP(NANOS) file and TIMESTAMP_NTZ for TIMESTAMP(MICROS) (Spark
+    4's inferTimestampNTZ default). A footer probe adapts to whichever
+    layout is on disk; ``read_table``'s output type is the BATCH type,
+    so the stream reads the raw file."""
+    from ..sources.readers import _read_events_raw
 
-    The driver has shipped the ts column as parquet TIMESTAMP(NANOS)
-    (which Spark only reads as int64 under nanosAsLong) in some rounds
-    and plain TIMESTAMP(MICROS) (→ TIMESTAMP_NTZ under Spark 4's
-    inferTimestampNTZ default) in others — a footer probe adapts to
-    whichever layout is on disk instead of hard-coding one."""
-    from ..sources.readers import read_table
-
-    # read_table already normalizes ts (ns→µs for the int64 layout), but
-    # its output type is the BATCH type; for the stream we need the
-    # on-disk type, so probe the raw file.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return raw.schema
+    return _read_events_raw(spark, os.path.join(sf_dir, "events.parquet")).schema
 
 
 _sink_counter = itertools.count()
@@ -75,11 +68,9 @@ def stream_events(
     # that name; directory → stream the directory itself (a glob filter
     # for "events.parquet" would match no part file and silently replay
     # zero rows).
-    import os as _os
-
-    events_path = _os.path.join(sf_dir, "events.parquet")
+    events_path = os.path.join(sf_dir, "events.parquet")
     reader = spark.readStream.schema(schema)
-    if _os.path.isdir(events_path):
+    if os.path.isdir(events_path):
         target = events_path
     else:
         reader = reader.option("pathGlobFilter", "events.parquet")
@@ -318,6 +309,9 @@ _FS_CHECKPOINT_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 _FILE_FORMAT = "org.apache.spark.sql.execution.datasources.FileFormat"
+# Every state partition pays a fixed state-store commit and Python-worker
+# cost in each batch, so a drain runs at most this many.
+_STATE_PARTITIONS = 8
 # A one-shot drain over at most this many bytes of files runs one state
 # partition; see _drain for the measurements behind it.
 _ONE_PARTITION_INPUT_BYTES = 256 * 1024
@@ -358,17 +352,18 @@ def _drain(
     spark: SparkSession,
     writer: DataStreamWriter,
     checkpoint: str | None = None,
-    state_partitions: int | None = None,
     process_all: bool = False,
 ) -> StreamingQuery:
     """Run one bounded streaming query to completion; every bounded
-    drain in the package goes through here. For the query's lifetime:
+    drain in the package goes through here, and it alone sets the
+    drain's width. For the query's lifetime:
 
-    - shuffle partitions are ``state_partitions`` capped at
+    - shuffle partitions are ``_STATE_PARTITIONS`` (8) capped at
       ``defaultParallelism``: each state partition is a task per batch
       with a fixed state-store commit and Python-worker cost, so wider
-      only adds task waves. A restart reuses the count recorded in the
-      checkpoint, so the cap acts on first starts only.
+      only adds task waves. A foreachBatch body's session inherits the
+      same width. A restart reuses the count recorded in the
+      checkpoint, so the width acts on first starts only.
     - with a throwaway checkpoint (no ``checkpoint`` and no session
       ``spark.sql.streaming.checkpointLocation``: the memory-sink drains
       of :func:`run_available_now` and :func:`run_process_all`) a drain
@@ -407,13 +402,12 @@ def _drain(
     ).scheme
     set_manager = scheme == "file" and conf.get(_CHECKPOINT_MANAGER, None) is None
     try:
-        if state_partitions is not None:
-            cap = min(state_partitions, spark.sparkContext.defaultParallelism)
-            # writer._df: the frame the writer was made from
-            size = None if path or cap == 1 else _file_stream_bytes(writer._df)
-            if size is not None and size <= _ONE_PARTITION_INPUT_BYTES:
-                cap = 1
-            conf.set("spark.sql.shuffle.partitions", str(cap))
+        width = min(_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+        # writer._df: the frame the writer was made from
+        size = None if path or width == 1 else _file_stream_bytes(writer._df)
+        if size is not None and size <= _ONE_PARTITION_INPUT_BYTES:
+            width = 1
+        conf.set("spark.sql.shuffle.partitions", str(width))
         if set_manager:
             conf.set(_CHECKPOINT_MANAGER, _FS_CHECKPOINT_MANAGER)
         if checkpoint is not None:
@@ -435,10 +429,7 @@ def _drain(
 
 
 def run_available_now(
-    result: DataFrame,
-    output_mode: str = "complete",
-    name: str | None = None,
-    state_partitions: int | None = None,
+    result: DataFrame, output_mode: str = "complete", name: str | None = None
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion with the AvailableNow
     trigger into an in-memory sink and return the sink table. This is
@@ -446,21 +437,17 @@ def run_available_now(
     real streaming query (state store, watermarks, micro-batches) and
     terminates. Production uses the same plan with a durable sink.
 
-    ``state_partitions`` is the upper bound of the stream's state
-    shuffle. The memory sink's checkpoint is throwaway, so over a file
-    source of at most 256 KiB the stream runs one state partition; see
-    :func:`_drain` for the cap and checkpoint rules."""
+    The memory sink's checkpoint is throwaway, so over a file source of
+    at most 256 KiB the stream runs one state partition, and otherwise
+    ``min(8, defaultParallelism)``; see :func:`_drain`."""
     name = name or f"stream_sink_{os.getpid()}_{next(_sink_counter)}"
     writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    _drain(result.sparkSession, writer, None, state_partitions)
+    _drain(result.sparkSession, writer)
     return result.sparkSession.table(name)
 
 
 def run_process_all(
-    result: DataFrame,
-    output_mode: str = "append",
-    name: str | None = None,
-    state_partitions: int | None = None,
+    result: DataFrame, output_mode: str = "append", name: str | None = None
 ) -> DataFrame:
     """Like :func:`run_available_now`, but drains via
     ``processAllAvailable()`` + ``stop()`` on a default micro-batch
@@ -472,7 +459,7 @@ def run_process_all(
     drain-a-bounded-cursor semantics."""
     name = name or f"stream_sink_{os.getpid()}_{next(_sink_counter)}"
     writer = result.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    _drain(result.sparkSession, writer, None, state_partitions, process_all=True)
+    _drain(result.sparkSession, writer, process_all=True)
     return result.sparkSession.table(name)
 
 
@@ -653,8 +640,7 @@ def cdc_apply_stream(
     key_cols: list[str],
     lsn_col: str,
     op_col: str,
-    state_partitions: int | None = None,
-    n_buckets: int | None = None,
+    n_buckets: int = 8,
 ):
     """Streaming CDC compaction: maintain a latest-state parquet table
     from a change-log STREAM via ``foreachBatch`` — the streaming twin
@@ -671,20 +657,19 @@ def cdc_apply_stream(
     state), which upgrades foreachBatch's at-least-once replay to
     exactly-once observable state.
 
-    With ``n_buckets`` (round 14, the partitioned layout the admission
-    stream pioneered) the state lives hash-partitioned on
-    ``key_bucket = pmod(xxhash64(keys), n_buckets)`` and each batch
-    MERGES AND REWRITES ONLY ITS TOUCHED BUCKETS: collapse the batch,
-    collect its ≤ ``n_buckets`` distinct buckets, partition-prune the
-    standing read to those buckets, cdc_latest over that slice ∪
-    batch, write to a dot-prefixed (reader-invisible) staging dir and
-    swap each touched bucket directory atomically — per-batch cost is
+    The state lives hash-partitioned on ``key_bucket =
+    pmod(xxhash64(keys), n_buckets)`` and each batch MERGES AND
+    REWRITES ONLY ITS TOUCHED BUCKETS: collapse the batch, collect its
+    ≤ ``n_buckets`` distinct buckets, partition-prune the standing read
+    to those buckets, cdc_latest over that slice ∪ batch, write to a
+    dot-prefixed (reader-invisible) staging dir and swap each touched
+    bucket directory atomically — per-batch cost is
     O(standing/n_buckets · touched + batch), and a narrow batch
     touches few buckets. CDC state is mutable (updates/tombstones), so
     unlike admission it cannot append — bounded rewrite is the floor,
     and every crash point stays replay-idempotent (a partial set of
-    bucket swaps re-merges to identical content). ``n_buckets=None``
-    keeps the legacy monolithic tmp → rename swap. Returns the
+    bucket swaps re-merges to identical content). The batch's shuffles
+    run at the width :func:`_drain` scoped for the stream. Returns the
     DataStreamWriter (caller starts + awaits)."""
     import glob as _glob
     import shutil as _shutil
@@ -694,49 +679,23 @@ def cdc_apply_stream(
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        old = spark.conf.get("spark.sql.shuffle.partitions")
+        # persist the collapsed batch: the touched-bucket collect and
+        # the merge write are separate ACTIONS — unpersisted, the
+        # batch's max_by collapse (and its shuffle) ran twice per
+        # micro-batch. Unpersisted in the finally below, scoped to
+        # this batch.
+        collapsed = cdc_latest(batch_df, key_cols, lsn_col, op_col).withColumn(
+            "key_bucket",
+            F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)),
+        ).persist()
         try:
-            if state_partitions is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(state_partitions)
-                )
-            collapsed = cdc_latest(batch_df, key_cols, lsn_col, op_col)
-            if n_buckets is None:
-                if os.path.exists(state_path):
-                    standing = spark.read.parquet(state_path)
-                    merged = cdc_latest(
-                        standing.unionByName(collapsed),
-                        key_cols,
-                        lsn_col,
-                        op_col,
-                    )
-                else:
-                    merged = collapsed
-                _atomic_swap(state_path, _stage(merged, state_path))
-                return
-            # persist the collapsed batch: the touched-bucket collect
-            # and the merge write are separate ACTIONS — unpersisted,
-            # the batch's max_by collapse (and its shuffle) ran twice
-            # per micro-batch (round 15; the same per-batch posture
-            # dedup_admission_stream got in round 14, guide §1.2).
-            # Unpersisted in the finally below, scoped to this batch.
-            collapsed = collapsed.withColumn(
-                "key_bucket",
-                F.pmod(
-                    F.xxhash64(*[F.col(k) for k in key_cols]),
-                    F.lit(n_buckets),
-                ),
-            ).persist()
             touched = [
                 r[0]
                 for r in collapsed.select("key_bucket").distinct().collect()
             ]
             if not touched:
                 return
-            has_state = bool(
-                _glob.glob(os.path.join(state_path, "key_bucket=*"))
-            )
-            if has_state:
+            if _glob.glob(os.path.join(state_path, "key_bucket=*")):
                 standing = spark.read.parquet(state_path).filter(
                     F.col("key_bucket").isin(touched)
                 )
@@ -756,12 +715,7 @@ def cdc_apply_stream(
                     _atomic_swap(dst, src)  # no bucket merges to 0 rows
             _shutil.rmtree(stage, ignore_errors=True)
         finally:
-            try:
-                collapsed.unpersist()  # scoped to this micro-batch;
-                # a no-op for the legacy (never-persisted) path
-            except NameError:
-                pass
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+            collapsed.unpersist()
 
     return (
         changes_stream.writeStream.foreachBatch(_apply)
@@ -774,15 +728,13 @@ def cdc_state(
     spark: SparkSession, state_path: str, op_col: str, delete_op: str = "D"
 ) -> DataFrame:
     """Live view over a :func:`cdc_apply_stream` state table: tombstones
-    filtered, op column consumed; the bucketed layout's physical
-    partition key (``key_bucket``) is dropped when present so both
-    layouts read back identically."""
-    out = spark.read.parquet(state_path).filter(
-        F.col(op_col) != delete_op
-    ).drop(op_col)
-    if "key_bucket" in out.columns:
-        out = out.drop("key_bucket")
-    return out
+    filtered, op column consumed, and the physical partition key
+    (``key_bucket``) dropped."""
+    return (
+        spark.read.parquet(state_path)
+        .filter(F.col(op_col) != delete_op)
+        .drop(op_col, "key_bucket")
+    )
 
 
 def dedup_admission_stream(
@@ -791,7 +743,6 @@ def dedup_admission_stream(
     checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    state_partitions: int | None = None,
     n_buckets: int = 16,
     compact_files_per_bucket: int = 16,
 ):
@@ -832,8 +783,9 @@ def dedup_admission_stream(
 
     At scale the state is the 16-byte-fingerprint table (~1/1000th of
     corpus bytes); size ``n_buckets`` so one bucket's fingerprints fit
-    a compaction task. Returns the DataStreamWriter (caller starts +
-    awaits)."""
+    a compaction task. The batch's shuffles run at the width
+    :func:`_drain` scoped for the stream. Returns the DataStreamWriter
+    (caller starts + awaits)."""
     import glob as _glob
 
     from ..functions.text import fingerprint
@@ -841,41 +793,27 @@ def dedup_admission_stream(
 
     def _admit(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            if state_partitions is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(state_partitions)
-                )
-            # batch-internal first-seen (smallest id per fingerprint),
-            # FUSED into one pass (round 15; r14 verdict #5): the old
-            # exact_dedup + re-fingerprint form normalized the text
-            # TWICE (one md5 inside exact_dedup's window key, one in
-            # the outer select) and shuffled the FULL row — text
-            # included — through the window sort just to re-derive the
-            # 16-byte fingerprint afterwards. One map pass now emits
-            # the fingerprint, and a map-side-combinable MIN(id)
-            # aggregate replaces the row_number window (guide §2.3
-            # "aggregate before you shuffle": only (fp, id) crosses the
-            # exchange, with partial mins combined map-side). Same
-            # result by construction: min id per normalized
-            # fingerprint.
-            # persisted: the touched-bucket probe and the admitted
-            # append are separate ACTIONS — unpersisted, the batch's
-            # fingerprint pass ran twice per micro-batch
-            batch_fp = (
-                batch_df.select(
-                    fingerprint(text_col).alias("doc_fingerprint"),
-                    F.col(id_col),
-                )
-                .groupBy("doc_fingerprint")
-                .agg(F.min(id_col).alias(id_col))
-                .withColumn(
-                    "fp_bucket",
-                    F.pmod(F.xxhash64("doc_fingerprint"), F.lit(n_buckets)),
-                )
-                .persist()
+        # batch-internal first-seen (smallest id per fingerprint) in ONE
+        # pass: a map pass emits the fingerprint, and a
+        # map-side-combinable MIN(id) aggregate keeps the smallest id
+        # per normalized fingerprint, so only (fp, id) crosses the
+        # exchange. Persisted: the touched-bucket probe and the
+        # admitted append are separate ACTIONS — unpersisted, the
+        # batch's fingerprint pass ran twice per micro-batch.
+        batch_fp = (
+            batch_df.select(
+                fingerprint(text_col).alias("doc_fingerprint"),
+                F.col(id_col),
             )
+            .groupBy("doc_fingerprint")
+            .agg(F.min(id_col).alias(id_col))
+            .withColumn(
+                "fp_bucket",
+                F.pmod(F.xxhash64("doc_fingerprint"), F.lit(n_buckets)),
+            )
+            .persist()
+        )
+        try:
             # bounded collect: ≤ n_buckets rows — drives partition
             # pruning of the standing scan AND the compaction sweep
             touched = [
@@ -912,11 +850,7 @@ def dedup_admission_stream(
                         bdir, _stage(spark.read.parquet(bdir).coalesce(1), bdir)
                     )
         finally:
-            try:
-                batch_fp.unpersist()  # scoped to this micro-batch
-            except NameError:
-                pass
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+            batch_fp.unpersist()  # scoped to this micro-batch
 
     return (
         docs_stream.writeStream.foreachBatch(_admit)

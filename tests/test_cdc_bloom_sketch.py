@@ -215,8 +215,7 @@ def test_cdc_stream_tombstone_beats_late_old_update(spark, tmp_path):
         .parquet(log)
     )
     state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    q = cdc_apply_stream(stream, state, ckpt, ["k"], "lsn", "op",
-                         state_partitions=2).start()
+    q = cdc_apply_stream(stream, state, ckpt, ["k"], "lsn", "op").start()
     q.awaitTermination()
 
     live = {r.k: (r.lsn, r.v) for r in cdc_state(spark, state, "op").collect()}
@@ -242,8 +241,7 @@ def test_cdc_stream_restart_is_noop(spark, tmp_path):
             spark.readStream.schema(spark.read.parquet(log).schema)
             .parquet(log)
         )
-        q = cdc_apply_stream(stream, state, ckpt, ["k"], "lsn", "op",
-                             state_partitions=2).start()
+        q = cdc_apply_stream(stream, state, ckpt, ["k"], "lsn", "op").start()
         q.awaitTermination()
     rows = spark.read.parquet(state).collect()
     assert len(rows) == 2  # one row per key, not doubled

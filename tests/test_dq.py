@@ -83,25 +83,6 @@ def test_unit_test_diff_and_verdict(spark):
     assert not evaluate_unit_test("t", actual, diff).passed
 
 
-def test_observe_quality_counts_in_single_pass(spark):
-    from olist_snowflake_dbt_spark.operators.dq import observe_quality
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "c"), (4, None)], "id long, v string"
-    )
-    observed, obs = observe_quality(
-        df, "audit", not_null_cols=["v"],
-        extra={"max_id": F.max("id")},
-    )
-    # the action that produces the data also produces the audit
-    assert observed.count() == 4
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["null_v"] == 2
-    assert got["max_id"] == 4
-
-
 class TestThresholdGrammar:
     """dbt test config surface: expression warn_if/error_if, fail_calc,
     limit (materializations/tests/helpers.sql:5-13)."""

@@ -4,7 +4,6 @@ import datetime as dt
 
 from olist_snowflake_dbt_spark.operators.incremental import (
     IncrementalTable,
-    incremental_append,
     incremental_delete_insert,
     incremental_insert_overwrite,
     incremental_merge,
@@ -31,11 +30,6 @@ def _batch(spark):
         (2, "b2", dt.datetime(2020, 1, 2)),
         (3, "c", dt.datetime(2020, 1, 2)),
     ])
-
-
-def test_append(spark):
-    out = incremental_append(_existing(spark), _batch(spark))
-    assert out.count() == 4
 
 
 def test_merge_upserts(spark):

@@ -189,16 +189,23 @@ class TestPerceptualHashDedup:
     def test_banded_radius_guard_and_cache_release(self, spark):
         """max_hamming >= bands breaks the pigeonhole recall guarantee —
         both banded operators must reject it up front; and the
-        persisted signature frames are released by the documented
-        cache-lifetime hook."""
+        persisted signature frames of all four signature operators are
+        released by ``release_operator_caches`` (what
+        ``tools/measure.cleanup`` calls)."""
         import pytest
 
         from olist_snowflake_dbt_spark.multimodal import (
             attach_fake_media,
+            audio_fp_pairs,
             phash_incremental_admit,
             phash_pairs,
+            video_phash_pairs,
         )
         from olist_snowflake_dbt_spark.multimodal import media as media_mod
+        from olist_snowflake_dbt_spark.operators._cache import (
+            _REGISTRY,
+            release_operator_caches,
+        )
 
         df = attach_fake_media(
             spark.createDataFrame(
@@ -212,13 +219,16 @@ class TestPerceptualHashDedup:
                 df, media_mod.perceptual_hash(df), max_hamming=7, bands=4
             )
 
-        media_mod.release_signature_caches()  # drop strays from other tests
-        pairs = phash_pairs(df, max_hamming=3, bands=4)
-        assert pairs.count() == 1
-        tracked = list(media_mod._PERSISTED_SIGS)
-        assert tracked and all(t.storageLevel.useMemory for t in tracked)
-        media_mod.release_signature_caches()
-        assert not media_mod._PERSISTED_SIGS
+        release_operator_caches(spark)  # drop strays from other tests
+        assert phash_pairs(df, max_hamming=3, bands=4).count() == 1
+        # the other three signature persists go through the same registry
+        for pairs in (audio_fp_pairs(df), video_phash_pairs(df),
+                      phash_incremental_admit(df, media_mod.perceptual_hash(df))):
+            pairs.count()
+        tracked = list(_REGISTRY.get(spark, []))
+        assert len(tracked) == 4 and all(t.storageLevel.useMemory for t in tracked)
+        assert release_operator_caches(spark) == 4
+        assert not _REGISTRY.get(spark)
         assert not any(t.storageLevel.useMemory for t in tracked)
 
     def test_video_frame_pairs_recall_and_still_frame_control(self, spark):

@@ -7,10 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from olist_snowflake_dbt_spark.operators import sampling as SMP
-from olist_snowflake_dbt_spark.operators.similarity import (
-    group_centroids,
-    group_vector_sums,
-)
+from olist_snowflake_dbt_spark.operators.similarity import group_vector_sums
 from olist_snowflake_dbt_spark.sources.readers import read_table
 
 
@@ -68,21 +65,6 @@ def test_stratified_topn_exact_counts(spark, sf_dir):
     avail = {r["lang"]: r["count"] for r in docs.groupBy("lang").count().collect()}
     for r in per:
         assert r["count"] == min(5, avail[r["lang"]])
-
-
-def test_group_centroids_matches_plain_average(spark, sf_dir):
-    emb = read_table(spark, sf_dir, "embeddings")
-    cents = {r["label"]: r["centroid"] for r in
-             group_centroids(emb, "embedding", "label", 64).collect()}
-    # twin computed with plain Spark: posexplode + avg
-    plain = (
-        emb.select("label", F.posexplode("embedding").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .collect()
-    )
-    for r in plain:
-        assert cents[r["label"]][r["i"]] == pytest.approx(r["m"], abs=1e-9)
 
 
 def test_group_vector_sums_schema(spark, sf_dir):

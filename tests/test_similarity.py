@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from olist_snowflake_dbt_spark.functions.vector import (
     cosine_similarity,
     dot,
-    euclidean_distance,
     norm,
 )
 from olist_snowflake_dbt_spark.operators.similarity import (
@@ -30,11 +29,10 @@ def test_vector_functions_basics(spark):
         dot("a", "b").alias("d"),
         norm("a").alias("na"),
         cosine_similarity("a", "b").alias("cos"),
-        euclidean_distance("a", "b").alias("dist"),
     ).collect()
     assert rows[0].d == 0.0 and abs(rows[0].cos) < 1e-12
     assert abs(rows[1].na - 3.0) < 1e-12
-    assert abs(rows[1].cos - 1.0) < 1e-12 and rows[1].dist == 0.0
+    assert abs(rows[1].cos - 1.0) < 1e-12
 
 
 def test_cosine_zero_vector_is_null(spark):

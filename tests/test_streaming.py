@@ -212,7 +212,7 @@ def test_enrich_with_dim_equals_batch_join(spark, sf_dir):
         dim_key="c_custkey",
         dim_cols=["c_mktsegment"],
     ).select("event_id", "user_id", "c_mktsegment")
-    sink = run_available_now(enriched, "append", state_partitions=4)
+    sink = run_available_now(enriched, "append")
 
     ev = read_table(spark, sf_dir, "events").select("event_id", "user_id")
     expected = ev.join(
@@ -351,7 +351,6 @@ def test_transform_with_state_matches_legacy_and_batch(spark, sf_dir, batch_even
         sink = run_available_now(
             user_totals_tws(stream_events(spark, sf_dir)),
             output_mode="update",
-            state_partitions=8,
         )
     finally:
         if prev is None:
@@ -429,18 +428,63 @@ def test_stream_events_reads_directory_layout(spark, sf_dir, tmp_path):
     got = run_available_now(
         windowed_event_counts(
             stream_events(spark, str(dir_sf)), "1 hour", watermark="30 minutes"
-        ),
-        state_partitions=4,
+        )
     )
     want = run_available_now(
         windowed_event_counts(
             stream_events(spark, sf_dir), "1 hour", watermark="30 minutes"
-        ),
-        state_partitions=4,
+        )
     )
     assert got.count() > 0
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.fixture
+def nanos_as_long_restored(spark):
+    prev = spark.conf.get(_NANOS_AS_LONG, None)
+    spark.conf.set(_NANOS_AS_LONG, "false")
+    yield
+    if prev is None:
+        spark.conf.unset(_NANOS_AS_LONG)
+    else:
+        spark.conf.set(_NANOS_AS_LONG, prev)
+
+
+def test_micros_events_reads_leave_nanos_as_long_alone(
+    spark, sf_dir, nanos_as_long_restored
+):
+    """A TIMESTAMP(MICROS) events file is streamed and read without
+    changing the caller's ``nanosAsLong``."""
+    stream_events(spark, sf_dir)
+    assert read_table(spark, sf_dir, "events").count() > 0
+    assert spark.conf.get(_NANOS_AS_LONG) == "false"
+
+
+def test_nanos_events_file_reads_the_same_ts(
+    spark, sf_dir, tmp_path, nanos_as_long_restored
+):
+    """The same events rewritten with ``ts`` as TIMESTAMP(NANOS) read
+    back the same ``ts`` values in batch and in a stream."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    ts = table.schema.get_field_index("ts")
+    nanos = table.set_column(ts, "ts", table["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(nanos, str(tmp_path / "events.parquet"))
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == "ns"
+
+    def rows(df):
+        return sorted(df.select("event_id", F.col("ts").cast("timestamp")).collect())
+
+    want = rows(read_table(spark, sf_dir, "events"))
+    assert rows(read_table(spark, str(tmp_path), "events")) == want
+    streamed = run_available_now(stream_events(spark, str(tmp_path)), "append")
+    assert rows(streamed) == want and want
 
 
 def test_stream_stream_left_outer_emits_nulls_and_matches_batch(spark, sf_dir):
@@ -542,7 +586,6 @@ def test_tws_event_time_timers_close_sessions(spark, sf_dir, tmp_path):
         sink = run_available_now(
             user_sessions_tws(stream, gap_seconds=gap_s),
             "append",
-            state_partitions=8,
         )
     finally:
         if prev is None:
@@ -723,13 +766,15 @@ def test_dedup_admission_state_is_append_only_and_compacts(spark, tmp_path):
 def test_cdc_bucketed_state_matches_legacy_and_rewrites_only_touched(
     spark, tmp_path
 ):
-    """The r14 bucketed CDC layout: final live state identical to the
-    monolithic layout; a batch that touches one bucket leaves the other
-    buckets' files byte-untouched (no O(standing) rewrite)."""
+    """The bucketed CDC state layout: final live state identical to the
+    batch ``cdc_latest`` collapse of the whole log; a batch that touches
+    one bucket leaves the other buckets' files byte-untouched (no
+    O(standing) rewrite)."""
     import glob
     import os
     import shutil
 
+    from olist_snowflake_dbt_spark.operators.incremental import cdc_latest
     from olist_snowflake_dbt_spark.streaming import (
         cdc_apply_stream,
         cdc_state,
@@ -737,13 +782,12 @@ def test_cdc_bucketed_state_matches_legacy_and_rewrites_only_touched(
 
     # keys 0..15; xxhash64 spreads them over 4 buckets. Batch 1 = all
     # keys; batch 2 = UPDATE for key 3 and DELETE for key 5 only.
+    schema = "user_id long, lsn long, op string, value double"
     b1 = [(k, k * 10, "U", float(k)) for k in range(16)]
     b2 = [(3, 1000, "U", 99.0), (5, 1001, "D", 0.0)]
 
     def stage(rows, i, stage_dir):
-        df = spark.createDataFrame(
-            rows, "user_id long, lsn long, op string, value double"
-        )
+        df = spark.createDataFrame(rows, schema)
         part_dir = str(tmp_path / f"w{i}")
         df.coalesce(1).write.mode("overwrite").parquet(part_dir)
         [part] = glob.glob(os.path.join(part_dir, "part-*.parquet"))
@@ -751,37 +795,23 @@ def test_cdc_bucketed_state_matches_legacy_and_rewrites_only_touched(
         shutil.move(part, dst)
         os.utime(dst, (1_700_000_000 + i * 100,) * 2)
 
-    def drain(state, ckpt, **kw):
-        stage_dir = os.path.dirname(state) + "/log"
-        stream = (
-            spark.readStream.schema(
-                "user_id long, lsn long, op string, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage_dir)
-        )
-        q = cdc_apply_stream(
-            stream, state, ckpt, ["user_id"], "lsn", "op", **kw
-        ).start()
-        q.awaitTermination()
-
-    for mode in ("legacy", "bucketed"):
-        root = tmp_path / mode
-        os.makedirs(str(root / "log"))
-        for i, rows in enumerate([b1, b2]):
-            stage(rows, i, str(root / "log"))
-
-    drain(str(tmp_path / "legacy" / "state"), str(tmp_path / "legacy" / "ck"))
-    drain(
-        str(tmp_path / "bucketed" / "state"),
-        str(tmp_path / "bucketed" / "ck"),
-        n_buckets=4,
+    log = str(tmp_path / "bucketed" / "log")
+    os.makedirs(log)
+    for i, rows in enumerate([b1, b2]):
+        stage(rows, i, log)
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(log)
     )
-    legacy = {
+    q = cdc_apply_stream(
+        stream, str(tmp_path / "bucketed" / "state"),
+        str(tmp_path / "bucketed" / "ck"), ["user_id"], "lsn", "op", n_buckets=4,
+    ).start()
+    q.awaitTermination()
+    batch = {
         (r.user_id, r.lsn, r.value)
-        for r in cdc_state(
-            spark, str(tmp_path / "legacy" / "state"), "op"
-        ).collect()
+        for r in cdc_latest(spark.createDataFrame(b1 + b2, schema),
+                            ["user_id"], "lsn", "op").collect()
+        if r.op != "D"
     }
     bucketed = {
         (r.user_id, r.lsn, r.value)
@@ -789,7 +819,7 @@ def test_cdc_bucketed_state_matches_legacy_and_rewrites_only_touched(
             spark, str(tmp_path / "bucketed" / "state"), "op"
         ).collect()
     }
-    assert bucketed == legacy
+    assert bucketed == batch
     assert (3, 1000, 99.0) in bucketed and all(u != 5 for u, _, _ in bucketed)
 
     # untouched-bucket proof: replay batch 2 alone against a copy of the
@@ -803,12 +833,7 @@ def test_cdc_bucketed_state_matches_legacy_and_rewrites_only_touched(
     probe_log = str(tmp_path / "probe" / "log")
     os.makedirs(probe_log)
     stage(b2, 0, probe_log)
-    stream = (
-        spark.readStream.schema(
-            "user_id long, lsn long, op string, value double"
-        )
-        .parquet(probe_log)
-    )
+    stream = spark.readStream.schema(schema).parquet(probe_log)
     q = cdc_apply_stream(
         stream, state2, str(tmp_path / "probe" / "ck"),
         ["user_id"], "lsn", "op", n_buckets=4,
@@ -855,15 +880,14 @@ def test_drain_scopes_and_restores_confs_on_success_and_failure(spark, sf_dir, t
     before = spark.conf.get("spark.sql.shuffle.partitions")
     src = stream_events(spark, sf_dir).select("event_id")
     seen = []
-    _drain(spark, src.writeStream.foreachBatch(_batch_confs(seen)),
-           str(tmp_path / "ok"), state_partitions=2)
-    assert seen == [(_CHECKPOINTING + "FileSystemBasedCheckpointFileManager", "2")]
+    _drain(spark, src.writeStream.foreachBatch(_batch_confs(seen)), str(tmp_path / "ok"))
+    width = str(min(8, spark.sparkContext.defaultParallelism))
+    assert seen == [(_CHECKPOINTING + "FileSystemBasedCheckpointFileManager", width)]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert spark.conf.get(_MANAGER, None) is None
 
     with pytest.raises(StreamingQueryException, match="planted batch failure"):
-        _drain(spark, src.writeStream.foreachBatch(fail),
-               str(tmp_path / "fail"), state_partitions=2)
+        _drain(spark, src.writeStream.foreachBatch(fail), str(tmp_path / "fail"))
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert spark.conf.get(_MANAGER, None) is None
 
@@ -884,36 +908,6 @@ def test_drain_leaves_user_checkpoint_manager_alone(spark, sf_dir, tmp_path):
     assert [manager for manager, _ in seen] == [user_manager]
 
 
-def test_drain_caps_state_partitions_at_task_slots(spark, sf_dir, tmp_path):
-    """A state shuffle wider than the cores only adds task waves: asking
-    for more partitions than ``defaultParallelism`` runs with exactly
-    ``defaultParallelism``, and the rows equal an uncapped run's. Both
-    drains keep a durable checkpoint, so the input-size cap of a
-    one-shot drain does not apply."""
-    from olist_snowflake_dbt_spark.streaming.events import _drain
-
-    slots = spark.sparkContext.defaultParallelism
-    counts = windowed_event_counts(stream_events(spark, sf_dir), "15 minutes")
-
-    def drain(name, state_partitions):
-        writer = counts.writeStream.format("memory").queryName(name)
-        q = _drain(spark, writer.outputMode("complete"), str(tmp_path / name),
-                   state_partitions=state_partitions)
-        parts = {op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]}
-        return parts, sorted(spark.table(name).collect())
-
-    capped_parts, capped = drain("drain_capped", slots + 3)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(slots + 3))
-    try:  # no state_partitions: the session's width, uncapped
-        uncapped_parts, uncapped = drain("drain_uncapped", None)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert capped_parts == {slots}
-    assert uncapped_parts == {slots + 3}
-    assert capped == uncapped and capped
-
-
 # -- one-shot drains: state shuffle sized to the input -------------------
 
 
@@ -922,13 +916,12 @@ def sf001_dir(sf_dir):
     return os.path.join(os.path.dirname(sf_dir), "sf0.01")
 
 
-def _drain_to_memory(spark, frame, name, mode, state_partitions, checkpoint=None,
-                     process_all=False):
+def _drain_to_memory(spark, frame, name, mode, checkpoint=None, process_all=False):
     """(state-operator widths, batch count, sorted sink rows) of one drain."""
     from olist_snowflake_dbt_spark.streaming.events import _drain
 
     writer = frame.writeStream.format("memory").queryName(name).outputMode(mode)
-    q = _drain(spark, writer, checkpoint, state_partitions, process_all=process_all)
+    q = _drain(spark, writer, checkpoint, process_all=process_all)
     parts = {op["numShufflePartitions"]
              for p in q.recentProgress for op in p["stateOperators"]}
     batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
@@ -942,11 +935,11 @@ def test_one_shot_drain_sizes_state_shuffle_to_its_input(spark, sf001_dir, tmp_p
     slots = spark.sparkContext.defaultParallelism
     counts = windowed_event_counts(stream_events(spark, sf001_dir), "15 minutes")
     one_shot_parts, _, one_shot = _drain_to_memory(
-        spark, counts, "one_shot_counts", "complete", 8)
+        spark, counts, "one_shot_counts", "complete")
     durable_parts, _, durable = _drain_to_memory(
-        spark, counts, "durable_counts", "complete", slots, str(tmp_path / "ckpt"))
+        spark, counts, "durable_counts", "complete", str(tmp_path / "ckpt"))
     assert one_shot_parts == {1}
-    assert durable_parts == {slots}
+    assert durable_parts == {min(8, slots)}
     assert one_shot == durable and one_shot
 
 
@@ -964,7 +957,7 @@ def test_one_shot_width_is_one_only_up_to_the_input_bound(spark, sf001_dir, monk
     for bound in (size, size - 1):
         monkeypatch.setattr(ev, "_ONE_PARTITION_INPUT_BYTES", bound)
         widths[bound], _, rows = _drain_to_memory(
-            spark, counts, f"input_bound_{bound}", "complete", 8)
+            spark, counts, f"input_bound_{bound}", "complete")
         assert rows
     assert widths == {size: {1},
                       size - 1: {min(8, spark.sparkContext.defaultParallelism)}}
@@ -975,7 +968,7 @@ def test_durable_checkpoint_keeps_the_slot_cap(spark, sf_dir, tmp_path):
     drain is not sized by its first input."""
     counts = windowed_event_counts(stream_events(spark, sf_dir), "15 minutes")
     parts, _, rows = _drain_to_memory(
-        spark, counts, "durable_slot_cap", "complete", 8, str(tmp_path / "ckpt"))
+        spark, counts, "durable_slot_cap", "complete", str(tmp_path / "ckpt"))
     assert parts == {min(8, spark.sparkContext.defaultParallelism)} and rows
 
 
@@ -990,7 +983,7 @@ def test_non_file_source_keeps_the_slot_cap(spark):
     assert _file_stream_bytes(docs) is None
     assert _file_stream_bytes(spark.readStream.format("rate").load()) is None
     parts, batches, rows = _drain_to_memory(
-        spark, docs.groupBy("source").count(), "pyds_slot_cap", "complete", 8,
+        spark, docs.groupBy("source").count(), "pyds_slot_cap", "complete",
         process_all=True)
     assert parts == {min(8, spark.sparkContext.defaultParallelism)}
     assert batches > 1 and sum(r["count"] for r in rows) == 300
@@ -1005,9 +998,9 @@ def test_multi_batch_drain_rows_match_at_width_one(spark, batch_events, tmp_path
               .option("maxFilesPerTrigger", "1").parquet(src))
     totals = user_running_totals(stream)
     narrow_parts, narrow_batches, narrow = _drain_to_memory(
-        spark, totals, "split_one_shot", "update", 8)
+        spark, totals, "split_one_shot", "update")
     wide_parts, wide_batches, wide = _drain_to_memory(
-        spark, totals, "split_durable", "update", 8, str(tmp_path / "ckpt"))
+        spark, totals, "split_durable", "update", str(tmp_path / "ckpt"))
     assert narrow_parts == {1}
     assert wide_parts == {min(8, spark.sparkContext.defaultParallelism)}
     assert narrow_batches == wide_batches == 3

@@ -31,6 +31,7 @@ def main() -> None:
     from olist_snowflake_dbt_spark.session import get_spark
     from olist_snowflake_dbt_spark.sources.readers import read_table
     from olist_snowflake_dbt_spark.streaming import clicks_left_outer_errors
+    from olist_snowflake_dbt_spark.streaming.events import _drain
 
     spark = get_spark("profile_sj_left")
     spark.range(1).count()
@@ -76,19 +77,11 @@ def main() -> None:
     joined = clicks_left_outer_errors(
         stream, horizon="10 minutes", watermark="1 minute"
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     t0 = time.perf_counter()
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("prof_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # the drain run_available_now uses, kept for its terminated query
+    q = _drain(spark, joined.writeStream.format("memory")
+               .queryName("prof_sink").outputMode("append"))
     t["stream_drain"] = time.perf_counter() - t0
-    spark.conf.set("spark.sql.shuffle.partitions", old)
 
     t0 = time.perf_counter()
     n = spark.table("prof_sink").filter(F.col("user_id") >= 0).count()

@@ -177,6 +177,7 @@ def stream_lane(scales: list[int], runs: int) -> None:
     from olist_snowflake_dbt_spark.functions.text import fingerprint
     from olist_snowflake_dbt_spark.session import get_spark
     from olist_snowflake_dbt_spark.streaming import dedup_admission_stream
+    from olist_snowflake_dbt_spark.streaming.events import _drain
 
     n_buckets = 16
     spark = get_spark("standing_growth_stream")
@@ -243,10 +244,9 @@ def stream_lane(scales: list[int], runs: int) -> None:
                 .parquet(stage)
             )
             t0 = time.perf_counter()
-            q = dedup_admission_stream(
+            _drain(spark, dedup_admission_stream(
                 stream, state, ckpt, n_buckets=n_buckets
-            ).start()
-            q.awaitTermination()
+            ), ckpt)
             e = time.perf_counter() - t0
             best = e if best is None else min(best, e)
             admitted = spark.read.parquet(state).count() - standing_rows
