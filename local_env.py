@@ -10,6 +10,11 @@ the operator didn't vet must never be a *library* default (see
 harness layer that already hardcodes container paths (``/root/testdata``):
 importing this module exports the env var if the operator hasn't set one.
 
+It also puts this checkout first on ``PYTHONPATH``: a tool puts it on
+its own ``sys.path`` only, and Spark's Python workers import the
+package through the environment the JVM inherits, whatever directory
+the tool was started from.
+
 Import this BEFORE importing ``olist_snowflake_dbt_spark`` (the package
 ``__init__`` consumes the env var pre-JVM-launch so the driver-side
 Python worker inherits ``PYTHONPATH``).
@@ -37,4 +42,13 @@ def export_protobuf_site() -> str | None:
     return os.environ["SPARK_GRAFT_PROTOBUF_SITE"]
 
 
+def export_checkout_path() -> None:
+    """Prepend this checkout to ``PYTHONPATH`` unless it is there."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
+
+
 export_protobuf_site()
+export_checkout_path()

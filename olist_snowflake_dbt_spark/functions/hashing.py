@@ -1,17 +1,15 @@
 """Hash-family builders for MinHash and SimHash — deterministic, seedable,
 and pure Catalyst expressions (xxhash64 + long arithmetic).
 
-MinHash signature: each shingle is xxhash64'd ONCE into two base hashes
-(h1, h2); the k hash functions are derived arithmetically as
-``h_i = h1 + i*h2`` (Kirsch-Mitzenmacher 2006 — two hashes suffice for
-Bloom/MinHash-style families), and the signature is a single ``aggregate``
-fold of per-shingle k-vectors into a running elementwise min. Work is
-O(|shingles| * k) long-arithmetic ops per row with NO per-salt string
-re-hashing and a codegen tree that is O(1) in k — the previous
-formulation (k independent ``transform``/``array_min`` branches, each
-re-hashing every shingle string) compiled to ~2 MB task binaries and ran
-~20x slower. A 100 TB corpus minhashes at scan speed; the only shuffle in
-LSH dedup is the band-bucket groupBy.
+MinHash signature: each shingle is hashed ONCE into two base hashes
+(a, b); the k hash functions are derived arithmetically as
+``h_i = (a + i*b) mod p`` (Kirsch-Mitzenmacher 2006 — two hashes
+suffice for Bloom/MinHash-style families), and the signature is the
+per-document ``min`` of each of those k columns in a hash aggregate over
+exploded shingles (:func:`minhash_components`). There is no per-salt
+string re-hashing, and the aggregate is whole-stage-codegen'd with
+map-side partials, so a 100 TB corpus minhashes at scan speed; the only
+shuffle in LSH dedup is the band-bucket groupBy.
 
 SimHash: 64-bit; bit b of the signature is the sign of the sum over
 tokens of ±1 according to bit b of the token's xxhash64 — bits extracted
@@ -51,12 +49,12 @@ def portable_hash60(col: Column, part: int = 0) -> Column:
 def lsh_band_keys_portable(
     signature: Column, bands: int, rows_per_band: int
 ) -> Column:
-    """Portable variant of :func:`lsh_band_keys`: the bucket key is the
-    '|'-joined string of (band index, band's signature slice) instead of
-    an xxhash64 — byte-identical in any engine that renders integers in
-    decimal. The key is ~5x wider than a hashed long (≈45 B vs 8 B),
-    which only the band-bucket shuffle pays; candidate generation and
-    verify are unchanged."""
+    """Array of ``bands`` LSH bucket keys; docs sharing any key are
+    candidate near-duplicates (standard banding: P[candidate] ≈
+    1-(1-j^r)^b). Each key is the '|'-joined string of (band index,
+    band's signature slice), byte-identical in any engine that renders
+    integers in decimal. It is ~5x wider than a hashed long (≈45 B vs
+    8 B), which only the band-bucket shuffle pays."""
     return F.array(
         *[
             F.concat_ws(
@@ -72,61 +70,16 @@ def lsh_band_keys_portable(
     )
 
 
-def minhash_signature(shingles: Column, k: int = 64) -> Column:
-    """Array of k minhash values over a (non-empty) shingle array.
-    Empty arrays yield an array of NULLs (no shingles → no signature)."""
-    base = F.transform(
-        shingles,
-        lambda s: F.struct(
-            F.pmod(F.xxhash64(s), F.lit(_M61)).alias("a"),
-            F.pmod(F.xxhash64(s, F.lit(1)), F.lit(_M61)).alias("b"),
-        ),
-    )
-    idx = F.sequence(F.lit(1), F.lit(k))
-    # least() ignores NULLs, so the all-NULL init folds to the true min;
-    # an empty shingle array never folds and keeps the NULL signature.
-    # The mod-p wrap is load-bearing: without it i*h2 dominates for large
-    # i and the min-h2 shingle wins EVERY high component, correlating the
-    # signature across documents that share any common shingle.
-    return F.aggregate(
-        base,
-        F.array_repeat(F.lit(None).cast("long"), k),
-        lambda acc, p: F.zip_with(
-            acc,
-            F.transform(idx, lambda i: F.pmod(p["a"] + i * p["b"], F.lit(_M61))),
-            lambda m, h: F.least(m, h),
-        ),
-    )
-
-
 def minhash_components(a: Column, b: Column, k: int) -> list[Column]:
     """The k Kirsch-Mitzenmacher hash values ``(a + i*b) mod p`` as
-    separate columns — the explode/groupBy formulation of
-    :func:`minhash_signature`. Higher-order array functions are
-    interpreted per element in Spark, so folding signatures per row is
-    ~20x slower than exploding shingles and taking ``min`` of these k
-    expressions in a hash aggregate, which is whole-stage-codegen'd and
-    map-side partial (shuffle = one 64-long row per document)."""
+    separate columns, for the explode/groupBy MinHash formulation: the
+    signature is the per-document ``min`` of each. Higher-order array
+    functions are interpreted per element in Spark, so folding
+    signatures per row is ~20x slower than exploding shingles and
+    taking ``min`` of these k expressions in a hash aggregate, which is
+    whole-stage-codegen'd and map-side partial (shuffle = one 64-long
+    row per document)."""
     return [F.pmod(a + F.lit(i) * b, F.lit(_M61)) for i in range(1, k + 1)]
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Array of ``bands`` bucket keys; docs sharing any key are candidate
-    near-duplicates (standard banding: P[candidate] ≈ 1-(1-j^r)^b).
-    xxhash64 consumes the band's signature slice directly as longs — no
-    string rendering."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.element_at(signature, b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def signature_jaccard(sig_a: Column, sig_b: Column) -> Column:

@@ -605,9 +605,10 @@ def oph_minhash_signatures(
     evaluates k Kirsch-Mitzenmacher components per shingle and folds k
     unconditional min-aggregates: its signature-stage arithmetic grows
     linearly in k, while OPH's is flat — MEASURED on the sf0.1 corpus
-    (SCALING.json dedup_minhash_oph.k_scaling, tools/oph_k_scale.py):
-    classic 2.29 s at k=64 → 6.60 s at k=256 (ratio 2.88); OPH 1.79 →
-    1.93 s (ratio 1.07), already ahead at k=64.
+    on 4 cores (SCALING.json dedup_minhash_oph.k_scaling, written by
+    ``tools/scale_bench.py --lane k_scaling``): classic 2.81 s at k=64 →
+    8.36 s at k=256 (ratio 2.98); OPH 3.16 → 3.17 s (ratio 1.00),
+    behind classic at k=64 and ahead at k=256.
 
     Empty bins are densified by borrowing from the nearest occupied bin
     to the RIGHT (circular), offset-tagged so a borrowed value never

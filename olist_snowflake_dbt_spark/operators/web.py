@@ -385,7 +385,7 @@ def cap_per_host(
     collect, the same plannable-skew discipline as
     join_strategy_advisor) reads the hottest host's row count; at or
     under ``auto_hot_threshold`` the plain window wins (the
-    tools/cap_zipf_scale.py crossover: plain won at 1M hot rows,
+    scale_bench --lane zipf crossover: plain won at 1M hot rows,
     two-phase won 11.54 s vs 28.59 s at 10M — threshold 2M sits
     between the measured points) and above it the two-phase path runs
     with ``max(8, min(1024, hot_rows div 250_000))`` buckets
@@ -471,7 +471,7 @@ def cap_per_host(
         # verifier below ride inside the plan instead of costing a
         # second pass (round-12: the old design persisted two frames and
         # ran a separate count job; prefiltered wall was 3-9x the plain
-        # window on every fixture — tools/cap_zipf_scale.py history).
+        # window on every fixture — scale_bench --lane zipf history).
         u32 = F.conv(F.substring("__cap_key", 1, 8), 16, 10).cast("bigint")
         budget = F.lit(int(prefilter_factor) * cap).cast("bigint")
         counts = with_host.groupBy(level).agg(

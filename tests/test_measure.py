@@ -1,5 +1,6 @@
-"""tools/measure.py: the one timer, cleanup and SCALING.json merge that
-bench.py and every tools/ lane share."""
+"""The tools/ harness: the one timer, cleanup and SCALING.json merge in
+tools/measure.py that bench.py, qbench and every scale_bench lane share,
+the lane table, and local_env's checkout path for Python workers."""
 
 from __future__ import annotations
 
@@ -76,12 +77,19 @@ def test_write_scaling_replaces_only_what_it_names(tmp_path):
             "state_note": "kept",
             "queries": {
                 "q1": {"sf0.1": 1.0, "sf1": 5.0, "ratio": 5.0,
+                       "sf1_spill_disk_mb": 1.0, "sf10": 40.0,
+                       "sf10_shuffle_mb": 90.0, "ratio_d2": 8.0,
+                       "bytes_ratio_d2": 9.0,
                        "forced_smj": {"sf1": 4.0}, "zipf": {"x1": {}}},
                 "q2": {"sf0.1": 2.0, "sf1": 8.0, "ratio": 4.0},
+                "q4": {"sf1": 2.0, "sf10": 30.0, "ratio_d2": 15.0,
+                       "bytes_ratio_d2": 9.0},
             },
         }, fh)
 
-    write_scaling({"q1": {"sf0.1": 1.5, "sf1": 3.0, "ratio": 2.0}},
+    # a run without sf10 keeps the sf10 decade; a run with it replaces it
+    write_scaling({"q1": {"sf0.1": 1.5, "sf1": 3.0, "ratio": 2.0},
+                   "q4": {"sf1": 2.0, "sf10": 20.0, "ratio_d2": 10.0}},
                   top={"runs_per_point": 2}, path=path)
     write_scaling({"q2": {"rows": 3}}, lane="state", path=path)
     write_scaling({"q3": {"k": 1}}, lane="k_scaling", path=path)
@@ -92,18 +100,41 @@ def test_write_scaling_replaces_only_what_it_names(tmp_path):
     assert doc["data_ratio"] == 10 and doc["runs_per_point"] == 2
     q = doc["queries"]
     assert q["q1"] == {"sf0.1": 1.5, "sf1": 3.0, "ratio": 2.0,
+                       "sf10": 40.0, "sf10_shuffle_mb": 90.0,
+                       "ratio_d2": 8.0, "bytes_ratio_d2": 9.0,
                        "forced_smj": {"sf1": 4.0}, "zipf": {"x1": {}}}
+    assert q["q4"] == {"sf1": 2.0, "sf10": 20.0, "ratio_d2": 10.0}
     assert q["q2"] == {"sf0.1": 2.0, "sf1": 8.0, "ratio": 4.0,
                        "state": {"rows": 3}}
     assert q["q3"] == {"k_scaling": {"k": 1}}
 
 
-@pytest.mark.parametrize("tool", [
-    "qbench", "scale_bench", "bpe_scale", "cap_zipf_scale", "oph_k_scale",
-    "standing_growth_scale", "stream_state_bench",
-])
+@pytest.mark.parametrize("tool", ["qbench", "scale_bench"])
 def test_tool_help_imports(tool):
     subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", f"{tool}.py"), "--help"],
         check=True, capture_output=True, timeout=60,
     )
+
+
+def test_every_committed_lane_has_a_generator():
+    from tools.lanes import LANES
+
+    with open(os.path.join(REPO, "SCALING.json")) as fh:
+        queries = json.load(fh)["queries"]
+    committed = {k for entry in queries.values()
+                 for k, v in entry.items() if isinstance(v, dict)}
+    assert set(LANES) == committed
+
+
+def test_oracle_tool_runs_python_workers_from_any_directory(tmp_path, sf_dir):
+    # the workers import the package through PYTHONPATH, not the cwd
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    done = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "check_oracle.py"),
+         sf_dir, "stream_stateful_totals"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stdout[-2000:] + done.stderr[-2000:]
+    assert "1 passed, 0 failed" in done.stdout

@@ -116,6 +116,10 @@ def time_noop(spark, make_df, runs: int) -> dict:
     return {"min": min(times), "runs": times, **moved}
 
 
+def _second_decade(key: str) -> bool:
+    return key.startswith("sf10") or key.endswith("_d2")
+
+
 def write_scaling(
     rows: dict[str, dict],
     lane: str | None = None,
@@ -125,9 +129,10 @@ def write_scaling(
     """Merge results into SCALING.json, replacing only what is named.
 
     Without ``lane``, ``rows[name]`` replaces that query's flat row and
-    keeps its nested lanes; with ``lane``, it replaces
-    ``queries[name][lane]`` alone. ``top`` replaces those top-level keys.
-    Every other query, lane and top-level key is kept. The file is
+    keeps its nested lanes, and its second-decade keys (``sf10*``,
+    ``*_d2``) too when the new row measured no sf10; with ``lane``, it
+    replaces ``queries[name][lane]`` alone. ``top`` replaces those
+    top-level keys. Every other query, lane and top-level key is kept. The file is
     swapped in whole, so an interrupted write cannot truncate it.
     """
     try:
@@ -139,8 +144,10 @@ def write_scaling(
     for name, row in rows.items():
         entry = queries.setdefault(name, {})
         if lane is None:
-            nested = {k: v for k, v in entry.items() if isinstance(v, dict)}
-            queries[name] = {**row, **nested}
+            keep_d2 = not any(map(_second_decade, row))
+            kept = {k: v for k, v in entry.items()
+                    if isinstance(v, dict) or (keep_d2 and _second_decade(k))}
+            queries[name] = {**row, **kept}
         else:
             entry[lane] = row
     doc.update(top or {})

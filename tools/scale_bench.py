@@ -33,13 +33,18 @@ coverage, VERDICT r08 #5); SCALE_QUERIES below keeps the curated
 scale-critical core with its per-family rationale, and --core limits
 a run to it.
 
+--lane <name> runs one nested evidence lane from tools/lanes.LANES
+instead (forced_smj, k_scaling, merge_budget_256, standing_growth,
+state, zipf) and writes it under queries[q][<name>]; each lane's
+docstring says what it measures. forced_smj also needs sf10.
+
 Usage: python tools/scale_bench.py [--runs 2] [--only q1,q2,...] [--core]
+       [--sf10] [--lane <name>]
 """
 
 from __future__ import annotations
 
 import argparse
-import functools
 import json
 import os
 import sys
@@ -49,7 +54,8 @@ sys.path.insert(0, REPO)
 
 import local_env  # noqa: E402,F401
 
-from tools.measure import time_noop, warm, write_scaling  # noqa: E402
+from tools.lanes import LANES, QUERY_LANES, query_rows  # noqa: E402
+from tools.measure import warm, write_scaling  # noqa: E402
 
 # the ~16 most expensive / scale-critical operators (bench top-list +
 # the deliberate fact-fact shuffles): every dedup family member, ANN,
@@ -164,7 +170,11 @@ DECADE2_QUERIES = [
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--only", default="")
+    ap.add_argument(
+        "--only",
+        default="",
+        help="comma list of queries (the catalog, forced_smj and state lanes)",
+    )
     ap.add_argument(
         "--core",
         action="store_true",
@@ -177,27 +187,19 @@ def main() -> None:
         "default) and record ratio_d2 = sf10/sf1",
     )
     ap.add_argument(
-        "--forced-smj",
-        action="store_true",
-        help="round-13 pin for the >10x d2 byte-ratio adjudications: "
-        "disable broadcast joins (static + AQE thresholds = -1) so BOTH "
-        "decades run sort-merge, and record the clean bytes_ratio_d2 "
-        "under a nested 'forced_smj' key (never clobbers the "
-        "default-plan numbers)",
+        "--lane",
+        choices=sorted(LANES),
+        help="run this nested SCALING.json lane instead of the flat catalog",
     )
     args = ap.parse_args()
-    from olist_snowflake_dbt_spark.queries import QUERIES as _ALL
-
-    names = [n for n in args.only.split(",") if n] or (
-        DECADE2_QUERIES if args.sf10
-        else SCALE_QUERIES if args.core
-        # full catalog: curated core first (canonical ordering for
-        # round-over-round diffs), then every remaining registered query
-        else SCALE_QUERIES + [q for q in _ALL if q not in SCALE_QUERIES]
-    )
+    only = [n for n in args.only.split(",") if n]
+    if args.lane and (args.core or args.sf10):
+        ap.error("--core and --sf10 pick catalog queries; a lane has its own")
+    if only and args.lane and args.lane not in QUERY_LANES:
+        ap.error(f"--only applies to the catalog and {', '.join(QUERY_LANES)}")
 
     sf_dirs = dict(SF_DIRS)
-    if args.sf10:
+    if args.sf10 or args.lane == "forced_smj":
         if not os.path.isdir(SF10_DIR):
             sys.exit(
                 "sf10 missing — run: python tools/gen_scale.py "
@@ -212,66 +214,36 @@ def main() -> None:
     from olist_snowflake_dbt_spark.session import get_spark
 
     spark = get_spark("scale_bench")
-    if args.forced_smj:
-        # both knobs: the static planner threshold AND the AQE runtime
-        # re-plan threshold — either alone still lets a broadcast in
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     warm(spark, *sf_dirs.values())
 
-    out: dict[str, dict] = {}
-    for name in names:
-        fn = QUERIES[name]
-        row: dict[str, float] = {}
-        for sf, sf_dir in sf_dirs.items():
-            try:
-                t = time_noop(spark, functools.partial(fn, spark, sf_dir), args.runs)
-                row[sf] = t["min"]
-                row[f"{sf}_shuffle_mb"] = t["shuffle_mb"]
-                for k in ("spill_disk_mb", "spill_mem_mb"):
-                    if t[k]:  # spill is rare — record only hits
-                        row[f"{sf}_{k}"] = t[k]
-            except Exception as exc:
-                row[f"{sf}_error"] = f"{type(exc).__name__}: {exc}"[:200]
-                print(f"{name} @ {sf} FAILED: {row[f'{sf}_error']}", file=sys.stderr)
-        if "sf0.1" in row and "sf1" in row:
-            row["ratio"] = round(row["sf1"] / row["sf0.1"], 2)
-            # bytes moved through exchanges, sf1 vs sf0.1: ~10 = linear
-            # shuffle, <<10 = sub-linear (sketch/capped/broadcast), >10 =
-            # super-linear data movement (adjudicate in SCALE.md)
-            if row.get("sf0.1_shuffle_mb", 0) >= 0.5:
-                row["bytes_ratio"] = round(
-                    row["sf1_shuffle_mb"] / row["sf0.1_shuffle_mb"], 2
-                )
-        if "sf1" in row and "sf10" in row:
-            # second decade: at sf1 the fixed session overhead is mostly
-            # amortized, so ratio_d2 reads closer to the true exponent
-            row["ratio_d2"] = round(row["sf10"] / row["sf1"], 2)
-            if row.get("sf1_shuffle_mb", 0) >= 0.5:
-                row["bytes_ratio_d2"] = round(
-                    row["sf10_shuffle_mb"] / row["sf1_shuffle_mb"], 2
-                )
-        out[name] = row
-        print(name, row, flush=True)
+    if args.lane:
+        rows = LANES[args.lane](spark, sf_dirs, only, args.runs)
+        write_scaling(rows, lane=args.lane)
+        print(json.dumps({args.lane: rows}))
+        return
 
-    if args.forced_smj:
-        # nested under forced_smj so the default-plan lane stays intact
-        write_scaling(out, lane="forced_smj")
-    else:
-        write_scaling(out, top={
-            "data_ratio": 10,
-            "runs_per_point": args.runs,
-            "note": (
-                "min-of-N wall seconds per scale factor in one shared session; "
-                "fixed per-query overhead (plan, Python worker, checkpoint "
-                "setup) does not scale with data, so linear operators show "
-                "ratio << 10. *_shuffle_mb = shuffle-write bytes moved by the "
-                "first run (executor-counter delta); bytes_ratio ~10 = linear "
-                "exchange, <<10 = sub-linear payload (sketch/cap/broadcast), "
-                ">10 = super-linear movement. Adjudication of outliers: "
-                "SCALE.md §measured."
-            ),
-        })
+    names = only or (
+        DECADE2_QUERIES if args.sf10
+        else SCALE_QUERIES if args.core
+        # full catalog: curated core first (canonical ordering for
+        # round-over-round diffs), then every remaining registered query
+        else SCALE_QUERIES + [q for q in QUERIES if q not in SCALE_QUERIES]
+    )
+    out = query_rows(spark, sf_dirs, names, args.runs)
+    write_scaling(out, top={
+        "data_ratio": 10,
+        "runs_per_point": args.runs,
+        "note": (
+            "min-of-N wall seconds per scale factor in one shared session; "
+            "fixed per-query overhead (plan, Python worker, checkpoint "
+            "setup) does not scale with data, so linear operators show "
+            "ratio << 10. *_shuffle_mb = shuffle-write bytes moved by the "
+            "first run (executor-counter delta); bytes_ratio ~10 = linear "
+            "exchange, <<10 = sub-linear payload (sketch/cap/broadcast), "
+            ">10 = super-linear movement. Adjudication of outliers: "
+            "SCALE.md §measured."
+        ),
+    })
     print(json.dumps({k: v.get("ratio") for k, v in out.items()}))
 
 
