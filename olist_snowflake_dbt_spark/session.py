@@ -8,9 +8,13 @@ memory knobs change.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("olist_snowflake_dbt_spark")
 
 # Defaults chosen for the harness box (local[32], 128 GiB). At cluster
 # scale, shuffle.partitions should be ~2-3x total cores and is largely
@@ -37,7 +41,7 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "snappy",
     # ContextCleaner reclaims broadcast blocks and shuffle files only via
     # weak references, i.e. only after a JVM GC — and a large driver heap
-    # (48g here, bigger on a real cluster) can go tens of minutes without
+    # (up to 48g here, bigger on a real cluster) can go tens of minutes without
     # one. Measured on this box: after ~30 queries the accumulated
     # broadcast/shuffle state degrades identical plans 10-20x (simhash
     # 54s vs 3s). The default interval is 30min; 2min keeps long-running
@@ -46,19 +50,30 @@ _DEFAULTS: dict[str, str] = {
     # money columns are DecimalType; keep Spark's exact decimal semantics
     "spark.sql.ansi.enabled": "false",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": "48g",
 }
 
+# The default driver heap: 48g, but no more than this share of physical
+# memory. The heap grows lazily toward its cap, and off-heap memory
+# (Arrow, netty, Python workers) comes on top, so a cap near the box's
+# size lets one large local job take the whole machine.
+_DRIVER_MEMORY_CAP_MB = 48 * 1024
+_DRIVER_MEMORY_SHARE = 0.5
 
-def get_spark(app_name: str = "olist_snowflake_dbt_spark", **overrides: str) -> SparkSession:
-    """Build (or fetch) the engine SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32).
-    Keyword overrides win over defaults.
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
-    conf = dict(_DEFAULTS)
+def _driver_memory() -> str:
+    """``min(48g, _DRIVER_MEMORY_SHARE of physical memory)``, in MiB;
+    48g where the platform does not report its memory."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return f"{_DRIVER_MEMORY_CAP_MB}m"
+    return f"{min(_DRIVER_MEMORY_CAP_MB, int(phys * _DRIVER_MEMORY_SHARE) >> 20)}m"
+
+
+def _conf(overrides: dict[str, str]) -> dict[str, str]:
+    """The conf :func:`get_spark` asks for: the defaults, the
+    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` width, then ``overrides``."""
+    conf = {**_DEFAULTS, "spark.driver.memory": _driver_memory()}
     # cluster knob: on a real deployment set SPARK_GRAFT_SHUFFLE_PARTITIONS
     # to ~2-3x total executor cores (e.g. 8000-12000 for 1000 executors x
     # 4 cores); AQE then coalesces the small ones at runtime, so erring
@@ -67,15 +82,32 @@ def get_spark(app_name: str = "olist_snowflake_dbt_spark", **overrides: str) -> 
     if shuffle_parts:
         conf["spark.sql.shuffle.partitions"] = shuffle_parts
     conf.update({str(k): str(v) for k, v in overrides.items()})
+    return conf
+
+
+def get_spark(app_name: str = "olist_snowflake_dbt_spark", **overrides: str) -> SparkSession:
+    """Build (or fetch) the engine SparkSession.
+
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32).
+    Keyword overrides win over defaults. On a live session only runtime
+    confs can change; each requested key whose live value differs (a
+    static or Spark core conf) is logged, and the session keeps it.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    conf = _conf(overrides)
     active = SparkSession.getActiveSession()
     if active is not None:
-        # reuse the driver-provided session; only apply runtime-settable conf
+        # reuse the driver-provided session
         for k, v in conf.items():
-            if not k.startswith(("spark.driver.", "spark.ui.")):
-                try:
-                    active.conf.set(k, v)
-                except Exception:
-                    pass  # static conf on a live session — keep the session's value
+            try:
+                active.conf.set(k, v)
+            except AnalysisException:
+                pass  # static or Spark core conf: compared below
+            live = active.conf.get(k, None)
+            if live != v:
+                log.warning("get_spark: live session keeps %s=%r, not the requested %r",
+                            k, live, v)
         return active
     for k, v in conf.items():
         builder = builder.config(k, v)

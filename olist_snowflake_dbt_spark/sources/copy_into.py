@@ -43,6 +43,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.local_frame import empty_df
+
 
 def _fingerprint(path: str, full: bool = False) -> str:
     import hashlib
@@ -147,7 +149,9 @@ class CopyInto:
     def read(self, schema=None) -> DataFrame:
         data = os.path.join(self.target_dir, "data")
         if not os.path.exists(data):
-            return self.spark.createDataFrame([], schema)
+            if schema is None:
+                raise ValueError("nothing loaded yet: an empty read needs a schema")
+            return empty_df(self.spark, schema)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)

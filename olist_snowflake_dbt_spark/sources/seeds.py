@@ -19,11 +19,18 @@ zeros (zip prefix "01037" → 1037) — SURVEY.md §1.3.
 
 from __future__ import annotations
 
+import csv
+import logging
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.materialize import materialize_table
+from .readers import local_path
+
+log = logging.getLogger("olist_snowflake_dbt_spark")
 
 # Candidate regexes, tested in dbt-agate precedence order on non-null values.
 _INT_RE = r"^[-+]?\d{1,18}$"
@@ -45,6 +52,42 @@ def _col(name: str) -> Column:
     return F.col(_quote(name))
 
 
+def _csv_header(spark: SparkSession, path: str) -> list[str] | None:
+    """The column names Spark's CSV inference gives the single local
+    file ``path`` with ``header`` on, read on the driver; ``None`` for a
+    directory, a non-local path or a header this reader cannot take, and
+    the caller then lets Spark read the header in a job.
+
+    As Spark's inference: the header is the first line (split on LF, CR
+    or CRLF; a UTF-8 BOM dropped, as Hadoop's line reader drops it) that
+    is not empty after trimming spaces, tokenized with ``"`` as quote and
+    escape; then ``CSVUtils.makeSafeHeader``: an empty name becomes
+    ``_c{i}``, and a name duplicated (case-insensitively unless
+    ``spark.sql.caseSensitive``) becomes the name plus its index."""
+    local = local_path(spark, path)
+    if local is None or not os.path.isfile(local):
+        log.info("CSV header of %s read by Spark: not a local file", path)
+        return None
+    try:
+        with open(local, encoding="utf-8-sig", newline="") as f:
+            line = next((ln for ln in f if ln.rstrip("\r\n").strip(" ")), None)
+            row = None if line is None else next(
+                csv.reader([line.rstrip("\r\n")], quotechar='"', doublequote=True))
+    except (UnicodeDecodeError, csv.Error) as exc:
+        log.info("CSV header of %s read by Spark: %s", path, exc)
+        return None
+    if not row:
+        log.info("CSV header of %s read by Spark: no header line", path)
+        return None
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    keys = [n if case_sensitive else n.lower() for n in row]
+    dup = {k for k in keys if keys.count(k) > 1}
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if k in dup else n
+        for i, (n, k) in enumerate(zip(row, keys))
+    ]
+
+
 def _read_raw_strings(spark: SparkSession, path: str) -> DataFrame:
     """Read CSV with every column as string; normalize NULL literals and BOM.
 
@@ -53,10 +96,20 @@ def _read_raw_strings(spark: SparkSession, path: str) -> DataFrame:
     doubled-quote escapes, ``""``/``"null"`` → NULL (FIXTURES.md). One
     projection strips a BOM/whitespace that survived into a header name
     and maps the NULL literals.
+
+    A single local file is read under the all-string schema of its
+    header, parsed on the driver by :func:`_csv_header`, so no Spark job
+    runs to read it; a directory keeps Spark's header job. Nothing is
+    cached: each call reads its header afresh.
     """
-    df = spark.read.options(
+    reader = spark.read.options(
         header=True, quote='"', escape='"', encoding="UTF-8", mode="PERMISSIVE"
-    ).csv(path)
+    )
+    header = _csv_header(spark, path)
+    if header is not None:
+        reader = reader.schema(
+            T.StructType([T.StructField(n, T.StringType()) for n in header]))
+    df = reader.csv(path)
     return df.select(*(
         F.when(F.lower(_col(c)).isin(*_NULL_LITERALS), None)
         .otherwise(_col(c))

@@ -37,9 +37,10 @@ from pyspark.sql.types import (
 def _events_schema(spark: SparkSession, sf_dir: str) -> StructType:
     """The on-disk schema of events.parquet: ``ts`` is int64 for a
     TIMESTAMP(NANOS) file and TIMESTAMP_NTZ for TIMESTAMP(MICROS) (Spark
-    4's inferTimestampNTZ default). A footer probe adapts to whichever
-    layout is on disk; ``read_table``'s output type is the BATCH type,
-    so the stream reads the raw file."""
+    4's inferTimestampNTZ default). The footer is read and converted on
+    the driver (``readers.parquet_schema``), so building the stream runs
+    no schema-inference job; ``read_table``'s output type is the BATCH
+    type, so the stream reads the raw file."""
     from ..sources.readers import _read_events_raw
 
     return _read_events_raw(spark, os.path.join(sf_dir, "events.parquet")).schema

@@ -4,8 +4,9 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from olist_snowflake_dbt_spark.sources.readers import read_table
+from olist_snowflake_dbt_spark.sources.readers import _read_events_raw, read_table
 from olist_snowflake_dbt_spark.streaming import (
     dedup_within_watermark,
     run_available_now,
@@ -477,6 +478,10 @@ def test_nanos_events_file_reads_the_same_ts(
     nanos = table.set_column(ts, "ts", table["ts"].cast(pa.timestamp("ns")))
     pq.write_table(nanos, str(tmp_path / "events.parquet"))
     assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == "ns"
+    # the driver-read footer schema is inference's: ts as int64 nanos
+    raw = _read_events_raw(spark, str(tmp_path / "events.parquet"))
+    assert isinstance(raw.schema["ts"].dataType, LongType)
+    assert raw.schema == spark.read.parquet(str(tmp_path / "events.parquet")).schema
 
     def rows(df):
         return sorted(df.select("event_id", F.col("ts").cast("timestamp")).collect())

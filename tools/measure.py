@@ -22,7 +22,9 @@ MB = 1024.0 * 1024.0
 def warm(spark, *sf_dirs: str) -> None:
     """Run a trivial job, then read one row of every input table under
     each scale dir, so timed runs pay neither JVM/codegen startup nor
-    the first parquet footer and vectorized-reader init."""
+    the first Parquet scan's reader init. ``read_table`` reads each
+    footer schema on the driver on every call (nothing is cached), so
+    warming changes no later read's schema."""
     from olist_snowflake_dbt_spark.sources.readers import TESTDATA_TABLES, read_table
 
     spark.range(1).count()
